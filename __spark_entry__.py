@@ -5573,138 +5573,18 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_multi_join(spark, "/root/testdata/sf0.001")
 
 
-# r12 driver-window rotation (VERDICT r11 #7): the driver samples the
-# FIRST 50 registry entries each round. This round leads with (a) the
-# two NEW r12 declared queries — bm25_pointer_compact (object-store-
-# safe dest-compaction + _LATEST pointer flip, full survivor-corpus
-# SQL oracle) and ivf_retrain_topk (quantizer retrain + purge +
-# pointer-resolved search, invariant oracle) — and (b) the two queries
-# most directly REWIRED by the Bm25Index v4 format (per-doc membership
-# table: add's skip set, compact's exact purge accounting):
-# bm25_incremental and bm25_delete_compact. The rest of the window is
-# the cohort least recently driver-sampled, oldest first: the five
-# r2-window members, the three r3 ones, the sixteen r4 statistics/
-# events queries, the ten r5 ones, and the twelve r6 curation queries
-# — 46 stale members in-window; pii_redact (r7) and collect_agg (r8)
-# spill to positions 51-52 and lead the r13 rotation. 48 of this
-# 50-query window are NOT in the r11 window (computed from
-# CORRECTNESS_r02..r11.json last-sampled rounds). queries() applies
-# this order ON TOP of the historical dict below, so round-history
-# comments stay put; the full set stays CI-gated at full width via
-# tests/test_oracle_full.py regardless of order. Update
-# tests/test_entry_contract.py's pin when changing this.
-_R12_HEAD = [
-    # NEW r12: dest-compaction + pointer flip, and the retrain path,
-    # both driver-hash-checked
-    "bm25_pointer_compact",
-    "ivf_retrain_topk",
-    # rewired by the v4 per-doc membership table
-    "bm25_incremental",
-    "bm25_delete_compact",
-    # stale cohort, least recently sampled first: r2
-    "term_frequency", "stupid_backoff", "mean_avg_precision",
-    "window_range_frame", "percentiles",
-    # r3
-    "fuzzy_name_pairs", "heavy_hitters", "funnel",
-    # r4
-    "jaccard_prefix_pairs", "supplier_reliability", "cross_source_dups",
-    "label_coherence", "event_transitions", "session_stats",
-    "funnel_latency", "twap_hourly", "table_profile", "snapshot_diff",
-    "target_encoding", "quantile_normalize", "rolling_median",
-    "retention_cohorts", "anomaly_flags", "first_touch",
-    # r5
-    "weighted_sample", "hashed_tf", "scd2_lookup", "triangle_count",
-    "dq_checks", "hll_union", "binned_range", "assoc_rules",
-    "pagerank_ranks", "gap_interpolate",
-    # r6
-    "repetition_signals", "contamination", "line_dedup", "cdc_upsert",
-    "lm_score", "gopher_rules", "bm25_search", "url_stats",
-    "ewma_smooth", "winsorized_stats", "bpe_tokens", "semantic_clusters",
-    # r7 (position 50)
-    "pii_redact",
-    # r8 — spills to position 51, leads the r13 rotation
-    "collect_agg",
-]
-
-# r13 driver-window rotation (VERDICT r12 #8): leads with the one NEW
-# r13 declared query — ivf_stream_autoretrain_topk (the closed drift
-# loop: streaming ingest fold watches the max_cell_share signal and
-# fires the quantizer retrain itself; invariant oracle) — then the
-# cohort least recently driver-sampled, oldest first: pii_redact (last
-# sampled r7), collect_agg (r8), and the 47 r9-window members
-# (computed from CORRECTNESS_r02..r12.json last-sampled rounds). 49 of
-# this 50-query window are NOT in the r12 window. Update
-# tests/test_entry_contract.py's pin when changing this.
-_R13_HEAD = [
-    # NEW r13: the fold-triggered retrain loop and the streaming BM25
-    # ingest fold (oracle class upgraded to DuckDB hash), both
-    # driver-hash-checked
-    "ivf_stream_autoretrain_topk",
-    "bm25_stream_ingest",
-    # stale cohort, least recently sampled first: r7, r8
-    "pii_redact", "collect_agg",
-    # r9 cohort (47)
-    "phash_neardup", "ordered_funnel", "source_similarity", "psi_drift",
-    "oov_rate", "dedup_savings", "doc_chunks", "url_dedup",
-    "mixture_weights", "key_skew_profile", "top_paths", "mad_outliers",
-    "duplicate_spans", "dsir_weights", "top_boilerplate_spans",
-    "dsir_resample", "strip_spans", "equidepth_hist",
-    "revenue_concentration", "doc_fingerprint", "minhash_dedup",
-    "dedup_clusters", "monthly_trend", "abc_classes",
-    "repeat_purchase_curve", "activity_heatmap", "chi_square_test",
-    "token_entropy", "rfm_segments", "brand_hhi", "group_mode",
-    "interarrival_stats", "twoway_effects", "value_autocorr",
-    "cusum_drift", "vocab_growth", "zipf_curve", "order_gaps",
-    "dup_rate_by_source", "gap_fill", "udtf_sentences", "nation_trade",
-    "nation_profit", "late_shipments", "order_distribution",
-    "waiting_suppliers", "window_nav",
-]
-
-
-_R14_HEAD = [
-    # NEW r14: filtered ANN (predicate pushed into the cell-pruned
-    # scan, invariant oracle), its exact value-hashed baseline, MMR
-    # diversity re-rank, and embedding-space decontamination
-    "ivf_filtered_topk",
-    "cosine_filtered_topk",
-    "mmr_rerank",
-    "embedding_decontamination",
-    "sq8_topk",
-    "group_cosine_topk",
-    "ivfpq_filtered_topk",
-    "token_budget_select",
-    # window_nav spilled to position 51 in r13 (the r13 head comment
-    # flagged it to lead this rotation); then the stalest cohort —
-    # every query last sampled in the r10 window (45), then the r11
-    # head's first two. ZERO overlap with the r13 window.
-    "window_nav",
-    "approx_distinct", "approx_percentile", "argmin_part", "array_fns2",
-    "augmented_eval", "binary_metrics", "conditional_agg", "covar_corr",
-    "disjunctive_pred", "embedding_neardup", "event_sliding_window",
-    "excess_shipments", "exists_subquery", "funnel_completions",
-    "grouped_ols", "histogram_bins", "idle_customers",
-    "important_stock", "ivf_topk", "kmv_distinct", "lang_id",
-    "large_orders", "local_supplier_volume", "map_fns", "market_share",
-    "null_fns", "ohlc_rollup", "pivot_counts", "pq_topk",
-    "promo_revenue", "regr_fns", "reservoir_sample", "returned_items",
-    "revenue_predicate", "scalar_subquery", "scd2_intervals",
-    "shipping_priority", "simhash_pairs", "supplier_part_counts",
-    "token_packing", "token_packing_greedy",
-]
-
-
 # r15 driver-window rotation (continuing the freshness-maximizing
 # pattern; no NEW queries this round — r15 is the second OPTIMIZATION
-# round). The four r10 stragglers the r14 head comment flagged lead
-# (top_supplier, unpivot_long, variant_json, window_pct — last sampled
-# r10), then the cohort last sampled in the r11 window, in that
-# window's own order (48 members; computed from
-# CORRECTNESS_r02..r14.json last-sampled rounds). 4 + 46 fill the
-# window; date_fns2 and grouping_sets (the two r11 members left out)
-# stay the stalest cohort and lead the r16 rotation. ZERO overlap with the r14 window. Update
-# tests/test_entry_contract.py's pin when changing this.
+# round). The four r10 stragglers lead (top_supplier, unpivot_long,
+# variant_json, window_pct — last sampled r10), then the cohort last
+# sampled in the r11 window, in that window's own order (48 members;
+# computed from CORRECTNESS_r02..r14.json last-sampled rounds). 4 + 46
+# fill the window; date_fns2 and grouping_sets (the two r11 members
+# left out) stay the stalest cohort and lead the r16 rotation. ZERO
+# overlap with the r14 window. Update tests/test_entry_contract.py's
+# pin when changing this.
 _R15_HEAD = [
-    # r10 stragglers (flagged by the r14 head comment)
+    # r10 stragglers
     "top_supplier", "unpivot_long", "variant_json", "window_pct",
     # r11 cohort (46 of 48, r11-window order)
     "ivf_delete_topk", "bm25_indexed", "incremental_index_add",
@@ -5965,8 +5845,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
     # rotate the r15 head to the front (comment above _R15_HEAD); the
     # second splat only UPDATES values for head keys, so order is
-    # head-first then historical order for the rest (_R12/_R13/_R14_HEAD
-    # kept above as round history)
+    # head-first then historical order for the rest
     return {**{k: base[k] for k in _R15_HEAD}, **base}
 
 

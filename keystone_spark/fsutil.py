@@ -19,6 +19,11 @@ on each index family (r12): the rewrite lands as a FRESH index at
 dest and the commit is one atomic versioned ``_LATEST.N`` pointer
 publish (``write_latest_pointer`` / ``resolve_index_path`` below) —
 no rename of live data at all.
+
+The four families share one compact and one delete protocol:
+``compact_index`` and ``delete_from_index`` below. A family supplies
+only its main table, partition column, rewrite hook and stored id
+field.
 """
 
 from __future__ import annotations
@@ -958,6 +963,116 @@ def append_tombstones(spark, path: str, tomb, root: str | None = None
     finally:
         release_write_lock(spark, path)
     return {"tombstones_added": n}
+
+
+def delete_from_index(spark, path: str, ids, id_field) -> dict:
+    """The delete protocol every index family shares: resolve the
+    current snapshot, refuse while a compact holds the lock, normalize
+    ``ids`` to the stored id type, and append them as tombstones
+    (``append_tombstones``). ``id_field(snapshot)`` returns the
+    family's stored id ``StructField`` — its name and type key the
+    tombstone frame, so the readers' anti-joins always line up."""
+    root, path = path, resolve_index_path(spark, path)
+    assert_not_compacting(spark, path)
+    field = id_field(path)
+    tomb = ids_to_tombstones(spark, ids, field.name, field.dataType)
+    return append_tombstones(spark, path, tomb, root=root)
+
+
+def compact_index(spark, path: str, dest: str | None, table: str,
+                  part_col: str, rewrite, files_key: str | None = None
+                  ) -> dict:
+    """The compact protocol every index family shares (also the tail
+    of the vector families' ``retrain``, a compact into ``dest``). The
+    family supplies its main ``table``, that table's partition column,
+    and ``rewrite(snapshot, out_dir)``: write the purged rewrite of the
+    snapshot into ``out_dir`` and return ``(tables to swap, extra
+    record fields)``.
+
+    - In place (``dest=None``): the rewrite lands in
+      ``{snapshot}/_compact_tmp`` and ``swap_tables`` installs it (rename
+      is atomic on local/HDFS only); the tombstones it purged are
+      dropped, the epoch fence bumped and the occupancy stats re-synced
+      before the lock is released.
+    - ``dest=...``: the object-store-safe form — the rewrite is a FRESH
+      index at ``dest`` (no rename of live data), published with one
+      atomic ``_LATEST`` pointer flip at the root. The source snapshot
+      is never mutated, so it keeps its tombstones and stays a correct
+      pre-compact snapshot for in-flight readers.
+
+    The record carries ``{files_key}_files_before/_after`` (parquet
+    file counts of ``table``; ``files_key`` defaults to ``table``), or
+    ``dest``/``pointer_version``/``{files_key}_files_after`` in dest
+    mode, plus the rewrite's own fields."""
+    root, path = path, resolve_index_path(spark, path)
+    if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
+                                                 root.rstrip("/")):
+        raise ValueError(
+            "dest must be a NEW index path — not the current "
+            "snapshot, and not the pointer root itself"
+        )
+    key = files_key or table
+    stage = f"{path.rstrip('/')}/_compact_tmp"
+    out = stage if dest is None else dest
+    # lock FIRST, load after: the rewrite's file listing and tombstone
+    # read must postdate the lock, or a mutation committing in between
+    # is silently erased by the swap. The WHOLE post-lock body sits in
+    # one try — an error anywhere before the swap must release the
+    # lock, or it leaks and blocks every later mutation
+    acquire_compact_lock(spark, path)
+    try:
+        # compact's half of the mutation-lock handshake: an in-flight
+        # add/delete would otherwise be purged as orphans and aborted
+        # at its epoch fence — fail fast instead
+        assert_no_write_lock(spark, path)
+        if dest is None:
+            fs_delete(spark, stage)
+        else:
+            clear_index_control_state(spark, dest)
+        tables, record = rewrite(path, out)
+        if count_parquet_files(spark, f"{out}/{table}") == 0:
+            # an empty data dir bricks every later load (parquet schema
+            # inference fails on a file-less directory), so abort
+            # before anything live is touched
+            fs_delete(spark, out)
+            raise ValueError(
+                "compact aborted: every indexed row is tombstoned, and the "
+                f"rewritten {table} table would be empty — no reader can "
+                "load a file-less directory. The live index is "
+                "untouched; delete the index instead of compacting it "
+                "empty"
+            )
+        if dest is None:
+            before = count_parquet_files(spark, f"{path}/{table}")
+            swap_tables(spark, path, stage, tables)
+            # tombstones are now physically purged from the data files
+            fs_delete(spark, f"{path}/tombstones")
+        else:
+            ptr = write_latest_pointer(spark, root,
+                                       pointer_target(root, dest))
+    except BaseException:
+        # dest mode and a failure before the swap marker leave the live
+        # index untouched: release. A failure mid-swap keeps the lock
+        # held until finish_swap repairs
+        if dest is not None or not fs_exists(spark,
+                                             f"{stage}/{SWAP_MARKER}"):
+            release_compact_lock(spark, path)
+        raise
+    if dest is not None:
+        release_compact_lock(spark, path)
+        return {"dest": dest, "pointer_version": ptr,
+                f"{key}_files_after": count_parquet_files(
+                    spark, f"{dest}/{table}"),
+                **record}
+    bump_compact_epoch(spark, path)  # the mutation commit fence
+    # re-sync the occupancy manifest to the rewrite; one narrow
+    # partition-column scan inside the still-held lock
+    refresh_index_stats(spark, path, table, part_col)
+    release_compact_lock(spark, path)
+    return {f"{key}_files_before": before,
+            f"{key}_files_after": count_parquet_files(
+                spark, f"{path}/{table}"),
+            **record}
 
 
 def read_tombstones(spark, path: str, id_col: str):

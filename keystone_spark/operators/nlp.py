@@ -989,21 +989,13 @@ class Bm25Index:
         cadences). The tombstone column takes the index's stored id
         type (from the postings schema), so string-id indexes delete
         correctly too."""
-        from keystone_spark.fsutil import (
-            assert_not_compacting,
-            ids_to_tombstones,
-            resolve_index_path,
-        )
+        from keystone_spark.fsutil import delete_from_index
 
-        root, path = path, resolve_index_path(spark, path)
-        assert_not_compacting(spark, path)
-        idx = cls.load(spark, path)
-        id_col = idx.params["id_col"]
-        id_type = idx.postings.schema[id_col].dataType
-        tomb = ids_to_tombstones(spark, ids, id_col, id_type)
-        from keystone_spark.fsutil import append_tombstones
+        def id_field(snap):
+            idx = cls.load(spark, snap)
+            return idx.postings.schema[idx.params["id_col"]]
 
-        return append_tombstones(spark, path, tomb, root=root)
+        return delete_from_index(spark, path, ids, id_field)
 
     @staticmethod
     def _tombstones(spark, path: str, id_col: str) -> DataFrame | None:
@@ -1054,189 +1046,59 @@ class Bm25Index:
         by the lock handshake). Uncommitted orphan generations (from a
         crashed add) are physically dropped here — the rewrite reads
         through ``load``, which serves committed rows only."""
-        from keystone_spark.fsutil import (
-            acquire_compact_lock,
-            fs_delete,
-            release_compact_lock,
-            resolve_index_path,
-        )
+        from keystone_spark.fsutil import compact_index
 
-        root, path = path, resolve_index_path(spark, path)
-        if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
-                                                     root.rstrip("/")):
-            raise ValueError(
-                "compact dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
+        def rewrite(snap, out):
+            idx = cls.load(spark, snap)  # validates format + manifest
+            p = idx.params
+            id_col = p["id_col"]
+            postings, docs_tbl = idx.postings, idx.docs
+            n_docs, sum_dl = p["n_docs"], p["sum_dl"]
+            tomb = cls._tombstones(spark, snap, id_col)
+            if tomb is not None:
+                # exact purge accounting from the per-doc membership
+                # table (v4): a deleted doc with ZERO tokens left no
+                # postings, so a postings-derived subtraction would keep
+                # it counted in N forever — the docs table has its row,
+                # so N and sum_dl land exactly on the surviving corpus.
+                gone = (
+                    docs_tbl.join(F.broadcast(tomb), id_col, "left_semi")
+                    .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
+                    .first()
+                )
+                n_docs -= int(gone["n"])
+                sum_dl -= int(gone["s"] or 0)
+                postings = postings.join(F.broadcast(tomb), id_col,
+                                         "left_anti")
+                docs_tbl = docs_tbl.join(F.broadcast(tomb), id_col,
+                                         "left_anti")
+            # one whole bucket per task -> one right-sized file per
+            # bucket directory; _write_data re-sorts by (tbucket, term)
+            # for row-group pruning. df is RE-DERIVED from the
+            # (surviving) postings — exact by construction (one posting
+            # row per (doc, term)), and the single code path that is
+            # correct both with and without tombstones.
+            merged = cls(
+                postings.repartition(F.col("tbucket")),
+                postings.groupBy("term", "tbucket").agg(
+                    F.count("*").alias("df")
+                ),
+                p,
+                docs=docs_tbl.repartition(
+                    spark.sparkContext.defaultParallelism),
             )
-        # lock FIRST, list/load after: the staged rewrite's file
-        # listing and tombstone read must postdate the lock, or a
-        # mutation committing in between is silently erased by the swap
-        acquire_compact_lock(spark, path)
-        stage = f"{path.rstrip('/')}/_compact_tmp"
-        if dest is not None:
-            # dest mode never mutates the source, so the lock is
-            # released unconditionally — no repair path to keep it for
-            try:
-                from keystone_spark.fsutil import assert_no_write_lock
+            merged._write_data(out, "overwrite", 0)
+            cls._append_manifest(spark, out, p, 0, n_docs, sum_dl,
+                                 committed=True, mode="overwrite")
+            return (["postings", "df", "docs", "params"],
+                    {"orphan_generations_purged":
+                        p["incomplete_generations"]})
 
-                assert_no_write_lock(spark, path)
-                idx = cls.load(spark, path)
-                return cls._compact_into(spark, root, path, idx, dest)
-            finally:
-                release_compact_lock(spark, path)
-        try:
-            # compact's half of the mutation-lock handshake (r12): an
-            # in-flight add/delete would otherwise be purged as orphans
-            # and aborted at its epoch fence — fail fast instead
-            from keystone_spark.fsutil import assert_no_write_lock
-
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)  # validates format + manifest
-            fs_delete(spark, stage)
-            return cls._compact_locked(spark, path, idx, stage)
-        except BaseException:
-            # staging/guard failure (live index untouched) — or a swap
-            # failure, where the lock must stay held until repair; the
-            # marker tells the two apart
-            from keystone_spark.fsutil import SWAP_MARKER, fs_exists
-
-            if not fs_exists(spark, f"{stage}/{SWAP_MARKER}"):
-                release_compact_lock(spark, path)
-            raise
-
-    @classmethod
-    def _purged_for_compact(cls, spark, path: str, idx: "Bm25Index"
-                            ) -> tuple["Bm25Index", int, int]:
-        """(merged index over surviving docs, exact n_docs, sum_dl) —
-        the shared rewrite core of in-place and dest compaction."""
-        p = idx.params
-        id_col = p["id_col"]
-        postings = idx.postings
-        docs_tbl = idx.docs
-        n_docs, sum_dl = p["n_docs"], p["sum_dl"]
-        tomb = cls._tombstones(spark, path, id_col)
-        if tomb is not None:
-            # exact purge accounting from the per-doc membership table
-            # (v4): a deleted doc with ZERO tokens left no postings, so
-            # the old postings-derived subtraction kept it counted in N
-            # forever — the docs table has its row, so N and sum_dl
-            # land exactly on the surviving corpus.
-            gone = (
-                docs_tbl.join(F.broadcast(tomb), id_col, "left_semi")
-                .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
-                .first()
-            )
-            n_docs -= int(gone["n"])
-            sum_dl -= int(gone["s"] or 0)
-            postings = postings.join(F.broadcast(tomb), id_col,
-                                     "left_anti")
-            docs_tbl = docs_tbl.join(F.broadcast(tomb), id_col,
-                                     "left_anti")
-        # one whole bucket per task -> one right-sized file per bucket
-        # directory; _write_data re-sorts by (tbucket, term) for
-        # row-group pruning. df is RE-DERIVED from the (surviving)
-        # postings — exact by construction (one posting row per
-        # (doc, term)), and the single code path that is correct both
-        # with and without tombstones.
-        n = spark.sparkContext.defaultParallelism
-        merged = cls(
-            postings.repartition(F.col("tbucket")),
-            postings.groupBy("term", "tbucket").agg(
-                F.count("*").alias("df")
-            ),
-            p,
-            docs=docs_tbl.repartition(n),
-        )
-        return merged, n_docs, sum_dl
-
-    @classmethod
-    def _compact_into(cls, spark, root: str, path: str,
-                      idx: "Bm25Index", dest: str) -> dict:
-        """Dest-mode compact body (source lock held by the caller):
-        write the purged rewrite as a fresh index at ``dest``, then
-        publish it with one atomic ``_LATEST`` pointer flip at
-        ``root`` — the object-store-safe path (no rename of live
-        data)."""
-        from keystone_spark.fsutil import (
-            clear_index_control_state,
-            count_parquet_files,
-            fs_delete,
-            pointer_target,
-            write_latest_pointer,
-        )
-
-        merged, n_docs, sum_dl = cls._purged_for_compact(spark, path,
-                                                         idx)
-        clear_index_control_state(spark, dest)
-        merged._write_data(dest, "overwrite", 0)
-        cls._append_manifest(spark, dest, idx.params, 0, n_docs, sum_dl,
-                             committed=True, mode="overwrite")
-        if count_parquet_files(spark, f"{dest}/postings") == 0:
-            fs_delete(spark, dest)
-            raise ValueError(
-                "compact aborted: every document is tombstoned, and "
-                "the rewritten postings table at dest would be empty "
-                "(no reader can load a file-less directory) — the "
-                "live index is untouched; delete the index instead of "
-                "compacting it empty"
-            )
-        ptr = write_latest_pointer(spark, root,
-                                   pointer_target(root, dest))
-        return {
-            "dest": dest,
-            "pointer_version": ptr,
-            "postings_files_after": count_parquet_files(
-                spark, f"{dest}/postings"),
-            "orphan_generations_purged":
-                idx.params["incomplete_generations"],
-        }
-
-    @classmethod
-    def _compact_locked(cls, spark, path: str, idx: "Bm25Index",
-                        stage: str) -> dict:
-        from keystone_spark.fsutil import (
-            count_parquet_files,
-            fs_delete,
-            release_compact_lock,
-            swap_tables,
-        )
-
-        p = idx.params
-        merged, n_docs, sum_dl = cls._purged_for_compact(spark, path,
-                                                         idx)
-        merged._write_data(stage, "overwrite", 0)
-        cls._append_manifest(spark, stage, p, 0, n_docs, sum_dl,
-                             committed=True, mode="overwrite")
-        if count_parquet_files(spark, f"{stage}/postings") == 0:
-            fs_delete(spark, stage)
-            raise ValueError(
-                "compact aborted: every document is tombstoned, and the "
-                "staged rewrite would leave an empty postings table that "
-                "no reader can load (parquet schema inference fails on "
-                "a file-less directory) — the live index is untouched; "
-                "delete the index directory instead of compacting it "
-                "empty"
-            )
-        files_before = count_parquet_files(spark, f"{path}/postings")
-        swap_tables(spark, path, stage,
-                    ["postings", "df", "docs", "params"])
-        # tombstones are now physically purged from the data files
-        fs_delete(spark, f"{path}/tombstones")
-        from keystone_spark.fsutil import (
-            bump_compact_epoch,
-            refresh_index_stats,
-        )
-
-        bump_compact_epoch(spark, path)  # the mutation commit fence
-        # re-sync the occupancy manifest to the merged rewrite (r14)
-        refresh_index_stats(spark, path, "postings", "tbucket")
-        release_compact_lock(spark, path)
-        return {"postings_files_before": files_before,
-                "postings_files_after": count_parquet_files(
-                    spark, f"{path}/postings"),
-                "generations_merged": True,
-                "orphan_generations_purged":
-                    p["incomplete_generations"]}
+        out = compact_index(spark, path, dest, "postings", "tbucket",
+                            rewrite)
+        if dest is None:
+            out["generations_merged"] = True
+        return out
 
     def search(
         self,

@@ -525,7 +525,335 @@ def _apply_search_predicate(subset: DataFrame, predicate, metadata,
     return subset.join(allowed, id_col, "left_semi")
 
 
-class IvfIndex:
+class _CellIndex:
+    """The stored-index lifecycle shared by ``IvfIndex`` and
+    ``IvfPqIndex``: a table partitioned by ``cell`` (``TABLE``) plus a
+    small JSON model (``MODEL_FILE``), both on the Hadoop FileSystem
+    (``file://``, ``hdfs://`` and bare local paths all work). A
+    subclass supplies its table and model file, the model's JSON fields
+    (``_meta`` / ``_from_meta``) and ``_kernel``, the per-row function
+    that cell-assigns (and encodes) rows under its FROZEN model.
+    Compact and delete run the protocol every index family shares
+    (``fsutil.compact_index`` / ``fsutil.delete_from_index``)."""
+
+    TABLE: str
+    MODEL_FILE: str
+
+    @classmethod
+    def add(cls, spark, path: str, batch: DataFrame,
+            skip_existing_ids: bool = False) -> dict:
+        """Append new vectors to a stored index WITHOUT retraining
+        (VERDICT r9 #1): the model is FROZEN — exactly FAISS's
+        ``IndexIVF.add`` / ``IndexIVFPQ.add`` semantics, where adding
+        vectors assigns (and encodes) them under the existing centroids
+        and codebooks and never moves one — so the batch runs through
+        the same kernel the build used and is appended to the
+        cell-partitioned table. Because the kernel is a pure per-row
+        function of (vector, model), search after add is IDENTICAL to
+        search over an index whose whole corpus went through the kernel
+        in one pass with the same model (pinned by test).
+
+        Staleness contract: what CAN degrade under appends is cell
+        balance (and PQ quantization error) — the model was trained on
+        the build-time sample, so if the data distribution drifts, new
+        vectors crowd few cells and recall/latency worsen at the same
+        n_probe_cells. That is a ``retrain`` decision; monitor the
+        returned per-add cell histogram. Batch ids must be fresh among
+        live ids (takedowns go through ``delete``) — or pass
+        ``skip_existing_ids=True`` to make the add IDEMPOTENT: ids
+        already stored OR tombstoned are anti-joined out BEFORE the
+        kernel (one narrow id-column scan, no vector bytes), so a
+        replayed batch (at-least-once streaming) appends nothing and
+        ``vectors_added`` counts only genuinely new ids. Note the union
+        with tombstones: a deleted id cannot be re-added under the same
+        id until ``compact`` purges its tombstone (search would
+        anti-join the new row out anyway); re-ingest deleted content
+        under a fresh id instead. For ``IvfPqIndex`` the exact re-rank
+        at search time fetches raw vectors from the BASE table the
+        caller passes — it must cover the appended ids too."""
+        from keystone_spark.fsutil import (
+            IndexContention,
+            acquire_write_lock,
+            assert_latest_unchanged,
+            assert_not_compacting,
+            assert_same_compact_epoch,
+            read_compact_epoch,
+            read_valid_index_stats,
+            refresh_index_stats,
+            release_write_lock,
+            resolve_index_path,
+            write_index_stats,
+        )
+
+        # mutations target the CURRENT snapshot (a dest-compact or
+        # retrain may have republished under a _LATEST pointer)
+        root, path = path, resolve_index_path(spark, path)
+        # mutation lock FIRST (VERDICT r11 #1): serializes concurrent
+        # adds/deletes; lock-then-check-compact is the deadlock-free
+        # handshake documented on acquire_write_lock
+        acquire_write_lock(spark, path)
+        try:
+            assert_latest_unchanged(spark, root, path)
+            assert_not_compacting(spark, path)
+            idx = cls.load(spark, path)
+            # pin the batch to the STORED schema (r13): an append whose
+            # id/vector types differ from the stored table (array<double>
+            # into an array<float> table) writes parquet files the
+            # reader cannot merge — later scans fail (or flake by
+            # file-listing order) with a physical-type mismatch.
+            batch = _cast_batch_checked(
+                batch, idx.id_col, idx.vec_col, idx.indexed.schema)
+            if skip_existing_ids:
+                known = idx.indexed.select(idx.id_col)
+                tomb = idx._load_tombstones(spark)
+                if tomb is not None:
+                    known = known.unionByName(tomb)
+                batch = batch.join(known, idx.id_col, "left_anti")
+            # persist-once (VERDICT r10 #3): the histogram collect
+            # materializes the cache and the write reads it back — the
+            # kernel does not run twice per append
+            rows = idx._kernel(
+                batch.where(F.col(idx.vec_col).isNotNull())).persist()
+            try:
+                cells = {
+                    int(r["cell"]): int(r["n"])
+                    for r in rows.groupBy("cell").agg(
+                        F.count("*").alias("n")
+                    ).collect()
+                }
+                # re-check at the write: a compact listed its input
+                # before this batch existed — committing under it hands
+                # the swap rows it will erase
+                assert_not_compacting(spark, path)
+                entry_epoch = read_compact_epoch(spark, path)
+                # pre-write stats read (r14): validation is against the
+                # PRE-append file listing, so it must happen before the
+                # parquet write changes the count
+                pre_counts = read_valid_index_stats(
+                    spark, path, cls.TABLE, "cell")
+                rows.write.mode("append").partitionBy("cell").parquet(
+                    f"{path}/{cls.TABLE}"
+                )
+                # post-write lock re-check (ADVICE r11 #2): the write
+                # job is the LONGEST phase — a compact that STARTED
+                # during it and is still running holds the lock but has
+                # not bumped the epoch yet, so the epoch fence alone
+                # would pass while the compact's swap goes on to erase
+                # the just-appended rows. Same pattern as
+                # fsutil.append_tombstones and Bm25Index.add.
+                try:
+                    assert_not_compacting(spark, path)
+                    assert_same_compact_epoch(spark, path, entry_epoch)
+                except ValueError as e:
+                    # re-wrap PRESERVING IndexContention (r13): the
+                    # streaming fold's retry loop keys on the class
+                    raise IndexContention(
+                        str(e) + " — for vector appends, retry with "
+                        "skip_existing_ids=True (surviving rows are "
+                        "skipped, erased ones re-added)"
+                    ) from e
+                # manifest-carried occupancy stays current through the
+                # streaming fold without a table scan: merge this
+                # batch's histogram into the pre-append counts (or
+                # re-scan once if a non-stats-aware mutation staled
+                # them). A crash between the append and this write is
+                # detected by the file-count fence — readers fall back
+                # to the scan, never serve a silently wrong number.
+                if pre_counts is not None:
+                    for c, n in cells.items():
+                        pre_counts[c] = pre_counts.get(c, 0) + n
+                    write_index_stats(
+                        spark, path, cls.TABLE, "cell", pre_counts)
+                else:
+                    refresh_index_stats(spark, path, cls.TABLE, "cell")
+            finally:
+                rows.unpersist()
+        finally:
+            release_write_lock(spark, path)
+        total = sum(cells.values())
+        return {"vectors_added": total,
+                "cells_touched": len(cells), "cell_histogram": cells,
+                # drift signal (reads against 1/n_cells): the share of
+                # THIS batch landing in its most crowded cell — a
+                # batch whose mass piles into one build-time cell is
+                # the retrain() trigger the add docstring describes
+                "max_cell_share": round(max(cells.values()) / total, 4)
+                if total else 0.0}
+
+    @classmethod
+    def delete(cls, spark, path: str, ids) -> dict:
+        """Tombstone vectors out of the stored index — the takedown
+        path the text index families already have (VERDICT r10,
+        family parity): one parquet append to ``{path}/tombstones``;
+        ``search`` anti-joins its cell-pruned scan against the set, so
+        a deleted embedding stops being served IMMEDIATELY, and
+        ``compact`` physically purges its rows. ``ids`` is a list or a
+        one-column DataFrame (typed from the stored table's schema);
+        unknown ids are harmless no-op rows."""
+        from keystone_spark.fsutil import delete_from_index
+
+        def id_field(snap):
+            idx = cls.load(spark, snap)
+            return idx.indexed.schema[idx.id_col]
+
+        return delete_from_index(spark, path, ids, id_field)
+
+    @classmethod
+    def compact(cls, spark, path: str, dest: str | None = None) -> dict:
+        """Physically purge tombstoned vectors and rewrite the table to
+        one file per cell directory (every ``add`` leaves a small file
+        set per touched cell). Search results afterwards equal an
+        index whose surviving rows went through the kernel in one pass
+        with the same frozen model (pinned by test). In place:
+        stage-and-swap through the Hadoop FileSystem API (rename is
+        atomic on local/HDFS only). ``dest=...``: the object-store-safe
+        form — the purged table written as a FRESH index at ``dest``,
+        published with one atomic ``_LATEST`` pointer flip at ``path``
+        (``fsutil.compact_index``). Not safe concurrently with ``add``
+        (enforced by the lock handshake)."""
+        from keystone_spark.fsutil import compact_index
+
+        def rewrite(snap, out):
+            idx = cls.load(spark, snap)
+            live = idx._live(spark).repartition(F.col("cell"))
+            if dest is None:
+                live.write.mode("overwrite").partitionBy("cell").parquet(
+                    f"{out}/{cls.TABLE}")
+            else:
+                idx._with(live).save(out)
+            return [cls.TABLE], {}
+
+        return compact_index(spark, path, dest, cls.TABLE, "cell",
+                             rewrite)
+
+    @classmethod
+    def _retrain(cls, spark, path: str, dest: str, sample_size: int,
+                 fit) -> dict:
+        """The retrain tail: sample the live rows, train, re-encode
+        every live row into a fresh index at ``dest``, build its cell
+        histogram and publish it with a ``_LATEST`` flip — the dest
+        path of ``fsutil.compact_index``, so the locking is a
+        dest-compact's. ``fit(idx)`` returns ``(live, train, record)``:
+        the live rows carrying raw vectors, ``train(normalized sample)``
+        returning the new model as an index without a table, and extra
+        record fields."""
+        from keystone_spark.fsutil import compact_index
+
+        def rewrite(snap, out):
+            idx = cls.load(spark, snap)
+            live, train, record = fit(idx)
+            # hash-ordered deterministic sample across the WHOLE live
+            # id range: orderBy(id).limit() (build's shape) would
+            # sample only the oldest ids — exactly the rows that do
+            # NOT carry the drift a retrain exists to capture
+            samp = np.array(
+                [
+                    r[1]
+                    for r in live.select(idx.id_col, idx.vec_col)
+                    .orderBy(F.xxhash64(F.col(idx.id_col)))
+                    .limit(sample_size)
+                    .collect()
+                ],
+                dtype=np.float64,
+            )
+            # ADVICE r12 #4: an all-tombstoned corpus must abort with
+            # THIS message, not a raw numpy IndexError from
+            # _normalize/_kmeans_centroids on an empty array
+            if len(samp) == 0:
+                raise ValueError(
+                    "retrain aborted: the live corpus is empty — "
+                    "nothing to train on (for IvfPqIndex, check that "
+                    "the base table covers the index's ids)"
+                )
+            new = train(_normalize(samp))
+            rows = new._kernel(live).repartition(F.col("cell"))
+            new._with(rows).save(out)
+            hist = {
+                int(r["cell"]): int(r["n"])
+                for r in spark.read.parquet(f"{out}/{cls.TABLE}")
+                .groupBy("cell").agg(F.count("*").alias("n")).collect()
+            }
+            # n_cells reports the centroids actually trained (ADVICE
+            # r12 #4): a live sample smaller than k yields fewer
+            return [cls.TABLE], {"n_cells": len(new.C), **record,
+                                 "vectors": sum(hist.values()),
+                                 "cell_histogram": hist}
+
+        out = compact_index(spark, path, dest, cls.TABLE, "cell", rewrite)
+        del out[f"{cls.TABLE}_files_after"]
+        return out
+
+    def _with(self, indexed: DataFrame) -> "_CellIndex":
+        """The same model over another table, not yet saved."""
+        import copy
+
+        twin = copy.copy(self)
+        twin.indexed, twin.path = indexed, None
+        return twin
+
+    def _load_tombstones(self, spark) -> DataFrame | None:
+        from keystone_spark.fsutil import read_tombstones
+
+        if self.path is None:
+            return None
+        return read_tombstones(spark, self.path, self.id_col)
+
+    def _live(self, spark) -> DataFrame:
+        """The stored table minus tombstoned ids (broadcast anti-join)."""
+        tomb = self._load_tombstones(spark)
+        if tomb is None:
+            return self.indexed
+        return self.indexed.join(F.broadcast(tomb), self.id_col, "left_anti")
+
+    def save(self, path: str) -> None:
+        """Table partitioned by cell (-> partition pruning on
+        load+search), model as JSON."""
+        import json
+
+        from keystone_spark.fsutil import (
+            clear_index_control_state,
+            fs_write_text,
+            refresh_index_stats,
+        )
+
+        spark = self.indexed.sparkSession
+        # brand-new index: clear control state from any previous index
+        # at this path (single-writer contract: a rebuild must not race
+        # a live compact/mutation of the old index)
+        clear_index_control_state(spark, path)
+        self.indexed.write.mode("overwrite").partitionBy("cell").parquet(
+            f"{path}/{self.TABLE}"
+        )
+        # manifest-carried occupancy (r14): one narrow partition-column
+        # scan NOW so every later index-status / --if-occupancy-above /
+        # streaming retrain-gate read is driver-side metadata instead
+        # of a table-proportional Spark job
+        refresh_index_stats(spark, path, self.TABLE, "cell")
+        # the model JSON rides the same Hadoop FileSystem as the table
+        # — a driver-local open() here made every non-local path fail
+        # at load before the FS-agnostic compact could even run
+        fs_write_text(spark, f"{path}/{self.MODEL_FILE}",
+                      json.dumps(self._meta()))
+        self.path = path
+
+    @classmethod
+    def load(cls, spark, path: str) -> "_CellIndex":
+        import json
+
+        from keystone_spark.fsutil import (
+            assert_no_interrupted_swap,
+            fs_read_text,
+            resolve_index_path,
+        )
+
+        path = resolve_index_path(spark, path)  # follow _LATEST
+        assert_no_interrupted_swap(spark, path)
+        meta = json.loads(fs_read_text(spark, f"{path}/{cls.MODEL_FILE}"))
+        return cls._from_meta(
+            meta, spark.read.parquet(f"{path}/{cls.TABLE}"), path)
+
+
+class IvfIndex(_CellIndex):
     """Fit-once IVF index: trained centroids + a cell-assigned corpus.
 
     ``ivf_topk`` recomputes cell assignments per query (pure function —
@@ -536,6 +864,8 @@ class IvfIndex:
     100 TB a search touches n_probe_cells/n_cells of the data and reads
     nothing else). The centroid table is tiny and rides along as JSON.
     """
+
+    TABLE, MODEL_FILE = "corpus", "centroids.json"
 
     def __init__(self, centroids: np.ndarray, indexed: DataFrame,
                  id_col: str = "vec_id", vec_col: str = "embedding",
@@ -591,304 +921,8 @@ class IvfIndex:
 
         return data.select(id_col, vec_col).mapInPandas(assign, schema)
 
-    @classmethod
-    def add(cls, spark, path: str, batch: DataFrame,
-            skip_existing_ids: bool = False) -> dict:
-        """Append new vectors to a stored index WITHOUT retraining
-        (VERDICT r9 #1, the third index family): the coarse quantizer
-        is FROZEN — exactly FAISS's ``IndexIVF.add`` semantics, where
-        adding vectors assigns them to existing cells and never moves
-        a centroid — so the batch is cell-assigned by the same kernel
-        the build used and appended to the cell-partitioned corpus.
-        Because assignment is a pure per-row function of (vector,
-        centroids), search after add is IDENTICAL to search over an
-        index whose whole corpus was assigned in one pass with the
-        same centroids (pinned by test).
-
-        Staleness contract: what CAN degrade under appends is cell
-        balance — the quantizer was trained on the build-time sample,
-        so if the data distribution drifts, new vectors crowd few
-        cells and recall/latency worsen at the same n_probe_cells.
-        That is a retrain (rebuild) decision; monitor the returned
-        per-add cell histogram. Batch ids must be fresh among live
-        ids (takedowns go through ``delete``) — or pass
-        ``skip_existing_ids=True`` to make the add IDEMPOTENT: ids
-        already stored OR tombstoned are anti-joined out BEFORE the
-        assignment kernel (one narrow id-column scan, no vector
-        bytes), so a replayed batch (at-least-once streaming) appends
-        nothing and ``vectors_added`` counts only genuinely new ids.
-        Note the union with tombstones: a deleted id cannot be
-        re-added under the same id until ``compact`` purges its
-        tombstone (search would anti-join the new row out anyway);
-        re-ingest deleted content under a fresh id instead."""
-        import os
-
-        from keystone_spark.fsutil import (
-            acquire_write_lock,
-            assert_latest_unchanged,
-            assert_not_compacting,
-            release_write_lock,
-            resolve_index_path,
-        )
-
-        # mutations target the CURRENT snapshot (a dest-compact or
-        # retrain may have republished under a _LATEST pointer)
-        root, path = path, resolve_index_path(spark, path)
-        # mutation lock FIRST (VERDICT r11 #1): serializes concurrent
-        # adds/deletes; lock-then-check-compact is the deadlock-free
-        # handshake documented on acquire_write_lock
-        acquire_write_lock(spark, path)
-        try:
-            assert_latest_unchanged(spark, root, path)
-            assert_not_compacting(spark, path)
-            idx = cls.load(spark, path)
-            # pin the batch to the STORED schema (r13): an append whose
-            # id/vector types differ from the corpus (array<double>
-            # into an array<float> table) writes parquet files the
-            # reader cannot merge — later scans fail (or flake by
-            # file-listing order) with a physical-type mismatch.
-            batch = _cast_batch_checked(
-                batch, idx.id_col, idx.vec_col, idx.indexed.schema)
-            if skip_existing_ids:
-                known = idx.indexed.select(idx.id_col)
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    known = known.unionByName(tomb)
-                batch = batch.join(known, idx.id_col, "left_anti")
-            assigned = cls._assign(
-                batch.where(F.col(idx.vec_col).isNotNull()),
-                idx.C, idx.id_col, idx.vec_col,
-            )
-            # persist-once (VERDICT r10 #3): the histogram collect
-            # materializes the cache and the write reads it back — the
-            # assignment kernel no longer runs twice per append
-            assigned = assigned.persist()
-            try:
-                cells = {
-                    int(r["cell"]): int(r["n"])
-                    for r in assigned.groupBy("cell").agg(
-                        F.count("*").alias("n")
-                    ).collect()
-                }
-                from keystone_spark.fsutil import (
-                    assert_not_compacting,
-                    assert_same_compact_epoch,
-                    read_compact_epoch,
-                )
-
-                # re-check at the write: a compact listed its input
-                # before this batch existed — committing under it hands
-                # the swap rows it will erase
-                assert_not_compacting(spark, path)
-                entry_epoch = read_compact_epoch(spark, path)
-                # pre-write stats read (r14): validation is against the
-                # PRE-append file listing, so it must happen before the
-                # parquet write changes the count
-                from keystone_spark.fsutil import (
-                    read_valid_index_stats,
-                    refresh_index_stats,
-                    write_index_stats,
-                )
-
-                pre_counts = read_valid_index_stats(
-                    spark, path, "corpus", "cell")
-                assigned.write.mode("append").partitionBy("cell").parquet(
-                    os.path.join(path, "corpus")
-                )
-                # post-write lock re-check (ADVICE r11 #2): the write
-                # job is the LONGEST phase — a compact that STARTED
-                # during it and is still running holds the lock but has
-                # not bumped the epoch yet, so the epoch fence alone
-                # would pass while the compact's swap goes on to erase
-                # the just-appended rows. Same pattern as
-                # fsutil.append_tombstones and Bm25Index.add.
-                try:
-                    assert_not_compacting(spark, path)
-                    assert_same_compact_epoch(spark, path, entry_epoch)
-                except ValueError as e:
-                    # re-wrap PRESERVING IndexContention (r13): the
-                    # streaming fold's retry loop keys on the class
-                    from keystone_spark.fsutil import IndexContention
-
-                    raise IndexContention(
-                        str(e) + " — for vector appends, retry with "
-                        "skip_existing_ids=True (surviving rows are "
-                        "skipped, erased ones re-added)"
-                    ) from e
-                # manifest-carried occupancy stays current through the
-                # streaming fold without a corpus scan: merge this
-                # batch's histogram into the pre-append counts (or
-                # re-scan once if a non-stats-aware mutation staled
-                # them). A crash between the append and this write is
-                # detected by the file-count fence — readers fall back
-                # to the scan, never serve a silently wrong number.
-                if pre_counts is not None:
-                    for c, n in cells.items():
-                        pre_counts[c] = pre_counts.get(c, 0) + n
-                    write_index_stats(
-                        spark, path, "corpus", "cell", pre_counts)
-                else:
-                    refresh_index_stats(spark, path, "corpus", "cell")
-            finally:
-                assigned.unpersist()
-        finally:
-            release_write_lock(spark, path)
-        total = sum(cells.values())
-        return {"vectors_added": total,
-                "cells_touched": len(cells), "cell_histogram": cells,
-                # drift signal (reads against 1/n_cells): the share of
-                # THIS batch landing in its most crowded cell — a
-                # batch whose mass piles into one build-time cell is
-                # the retrain() trigger the class docstring describes
-                "max_cell_share": round(max(cells.values()) / total, 4)
-                if total else 0.0}
-
-    @classmethod
-    def delete(cls, spark, path: str, ids) -> dict:
-        """Tombstone vectors out of the stored index — the takedown
-        path the text index families already have (VERDICT r10,
-        family parity): one parquet append to ``{path}/tombstones``;
-        ``search`` anti-joins its cell-pruned scan against the set, so
-        a deleted embedding stops being served IMMEDIATELY, and
-        ``compact`` physically purges its rows. ``ids`` is a list or a
-        one-column DataFrame (typed from the stored corpus schema);
-        unknown ids are harmless no-op rows."""
-        from keystone_spark.fsutil import (
-            assert_not_compacting,
-            ids_to_tombstones,
-            resolve_index_path,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        assert_not_compacting(spark, path)
-        idx = cls.load(spark, path)
-        id_type = idx.indexed.schema[idx.id_col].dataType
-        from keystone_spark.fsutil import append_tombstones
-
-        tomb = ids_to_tombstones(spark, ids, idx.id_col, id_type)
-        return append_tombstones(spark, path, tomb, root=root)
-
-    @classmethod
-    def compact(cls, spark, path: str, dest: str | None = None) -> dict:
-        """Physically purge tombstoned vectors and rewrite the corpus
-        to one file per cell directory (every ``add`` leaves a small
-        file set per touched cell). Search results afterwards equal an
-        index whose surviving corpus was assigned in one pass with the
-        same frozen centroids (pinned by test). In-place: stage-and-
-        swap through the Hadoop FileSystem API (rename is atomic on
-        local/HDFS only). ``dest=...``: the object-store-safe form —
-        purged corpus written as a FRESH index at ``dest``, published
-        with one atomic ``_LATEST`` pointer flip at ``path`` (see
-        ``Bm25Index.compact``). Not safe concurrently with ``add``
-        (enforced by the lock handshake)."""
-        from keystone_spark.fsutil import (
-            SWAP_MARKER,
-            acquire_compact_lock,
-            count_parquet_files,
-            fs_delete,
-            fs_exists,
-            release_compact_lock,
-            resolve_index_path,
-            swap_tables,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
-                                                     root.rstrip("/")):
-            raise ValueError(
-                "compact dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        # lock FIRST, load after: the rewrite's file listing and
-        # tombstone read must postdate the lock (see Bm25Index.compact).
-        # The WHOLE post-lock body sits in one try — an analyzer or IO
-        # error anywhere before the swap must release the lock, or it
-        # leaks and blocks every later mutation
-        acquire_compact_lock(spark, path)
-        if dest is not None:
-            # dest mode never mutates the source: release
-            # unconditionally — no repair path to keep the lock for
-            try:
-                from keystone_spark.fsutil import (
-                    assert_no_write_lock,
-                    pointer_target,
-                    write_latest_pointer,
-                )
-
-                assert_no_write_lock(spark, path)
-                idx = cls.load(spark, path)
-                corpus = idx.indexed
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    corpus = corpus.join(
-                        F.broadcast(tomb), idx.id_col, "left_anti"
-                    )
-                cls(idx.C, corpus.repartition(F.col("cell")),
-                    idx.id_col, idx.vec_col).save(dest)
-                if count_parquet_files(spark, f"{dest}/corpus") == 0:
-                    fs_delete(spark, dest)
-                    raise ValueError(
-                        "compact aborted: every vector is tombstoned "
-                        "and the rewritten corpus at dest would be "
-                        "empty — delete the index instead of "
-                        "compacting it empty"
-                    )
-                ptr = write_latest_pointer(spark, root,
-                                           pointer_target(root, dest))
-            finally:
-                release_compact_lock(spark, path)
-            return {"dest": dest, "pointer_version": ptr,
-                    "corpus_files_after": count_parquet_files(
-                        spark, f"{dest}/corpus")}
-        stage = f"{path.rstrip('/')}/_compact_tmp"
-        try:
-            # compact's half of the mutation-lock handshake (r12)
-            from keystone_spark.fsutil import assert_no_write_lock
-
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            corpus = idx.indexed
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                corpus = corpus.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
-            fs_delete(spark, stage)
-            (
-                corpus.repartition(F.col("cell"))
-                .write.mode("overwrite").partitionBy("cell")
-                .parquet(f"{stage}/corpus")
-            )
-            if count_parquet_files(spark, f"{stage}/corpus") == 0:
-                fs_delete(spark, stage)
-                raise ValueError(
-                    "compact aborted: every vector is tombstoned, and "
-                    "the staged rewrite would leave an empty corpus "
-                    "table that no reader can load (parquet schema "
-                    "inference fails on a file-less directory) — the "
-                    "live index is untouched; delete the index "
-                    "directory instead of compacting it empty"
-                )
-            before = count_parquet_files(spark, f"{path}/corpus")
-            swap_tables(spark, path, stage, ["corpus"])
-            fs_delete(spark, f"{path}/tombstones")
-        except BaseException:
-            if not fs_exists(spark, f"{stage}/{SWAP_MARKER}"):
-                release_compact_lock(spark, path)
-            raise
-        from keystone_spark.fsutil import (
-            bump_compact_epoch,
-            refresh_index_stats,
-        )
-
-        bump_compact_epoch(spark, path)  # the mutation commit fence
-        # re-sync the occupancy manifest to the rewritten corpus (r14);
-        # one narrow partition-column scan inside the already-held lock
-        refresh_index_stats(spark, path, "corpus", "cell")
-        release_compact_lock(spark, path)
-        return {"corpus_files_before": before,
-                "corpus_files_after": count_parquet_files(
-                    spark, f"{path}/corpus")}
+    def _kernel(self, data: DataFrame) -> DataFrame:
+        return self._assign(data, self.C, self.id_col, self.vec_col)
 
     @classmethod
     def retrain(cls, spark, path: str, dest: str, n_cells: int | None = None,
@@ -911,93 +945,17 @@ class IvfIndex:
         Tombstones are purged in ``dest`` (a retrain is also a
         compact). Returns the new cell histogram for before/after
         balance comparison."""
-        from keystone_spark.fsutil import (
-            acquire_compact_lock,
-            assert_no_write_lock,
-            count_parquet_files,
-            fs_delete,
-            pointer_target,
-            release_compact_lock,
-            resolve_index_path,
-            write_latest_pointer,
-        )
 
-        root, path = path, resolve_index_path(spark, path)
-        if dest.rstrip("/") in (path.rstrip("/"), root.rstrip("/")):
-            raise ValueError(
-                "retrain dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        # same locking as a dest-compact: the rewrite must not race a
-        # mutation, and never mutates the source — release
-        # unconditionally
-        acquire_compact_lock(spark, path)
-        try:
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            corpus = idx.indexed
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                corpus = corpus.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
+        def fit(idx):
             k = int(n_cells) if n_cells is not None else len(idx.C)
-            # hash-ordered deterministic sample across the WHOLE live
-            # id range: orderBy(id).limit() (build's shape) would
-            # sample only the oldest ids — exactly the rows that do
-            # NOT carry the drift a retrain exists to capture
-            samp = np.array(
-                [
-                    r[1]
-                    for r in corpus.select(idx.id_col, idx.vec_col)
-                    .orderBy(F.xxhash64(F.col(idx.id_col)))
-                    .limit(sample_size)
-                    .collect()
-                ],
-                dtype=np.float64,
-            )
-            # ADVICE r12 #4: an all-tombstoned corpus must abort with
-            # THIS message, not a raw numpy IndexError from
-            # _normalize/_kmeans_centroids on an empty array (the
-            # post-save emptiness check below is never reached)
-            if len(samp) == 0:
-                raise ValueError(
-                    "retrain aborted: the live corpus is empty — "
-                    "nothing to train on"
-                )
-            C = _normalize(_kmeans_centroids(_normalize(samp), k, seed))
-            reassigned = cls._assign(
-                corpus.select(idx.id_col, idx.vec_col), C,
-                idx.id_col, idx.vec_col,
-            )
-            cls(C, reassigned.repartition(F.col("cell")),
-                idx.id_col, idx.vec_col).save(dest)
-            if count_parquet_files(spark, f"{dest}/corpus") == 0:
-                fs_delete(spark, dest)
-                raise ValueError(
-                    "retrain aborted: the live corpus is empty — "
-                    "nothing to train on"
-                )
-            hist = {
-                int(r["cell"]): int(r["n"])
-                for r in spark.read.parquet(f"{dest}/corpus")
-                .groupBy("cell").agg(F.count("*").alias("n")).collect()
-            }
-            ptr = write_latest_pointer(spark, root,
-                                       pointer_target(root, dest))
-        finally:
-            release_compact_lock(spark, path)
-        # n_cells reports the centroids actually trained (ADVICE r12
-        # #4): a live sample smaller than k yields len(C) < k centroids
-        return {"dest": dest, "pointer_version": ptr, "n_cells": len(C),
-                "vectors": sum(hist.values()), "cell_histogram": hist}
 
-    def _load_tombstones(self, spark) -> DataFrame | None:
-        from keystone_spark.fsutil import read_tombstones
+            def train(sn):
+                C = _normalize(_kmeans_centroids(sn, k, seed))
+                return cls(C, None, idx.id_col, idx.vec_col)
 
-        if self.path is None:
-            return None
-        return read_tombstones(spark, self.path, self.id_col)
+            return idx._live(spark), train, {}
+
+        return cls._retrain(spark, path, dest, sample_size, fit)
 
     def search(
         self,
@@ -1088,56 +1046,13 @@ class IvfIndex:
             .where(F.col("rk") <= k)
         )
 
-    def save(self, path: str) -> None:
-        """Corpus partitioned by cell (-> partition pruning on load+search),
-        centroids as JSON."""
-        import json
-
-        from keystone_spark.fsutil import (
-            clear_index_control_state,
-            fs_write_text,
-        )
-
-        # brand-new index: clear control state from any previous index
-        # at this path (single-writer contract: a rebuild must not race
-        # a live compact/mutation of the old index)
-        clear_index_control_state(self.indexed.sparkSession, path)
-        self.indexed.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/corpus"
-        )
-        # manifest-carried occupancy (r14): one narrow partition-column
-        # scan NOW so every later index-status / --if-occupancy-above /
-        # streaming retrain-gate read is driver-side metadata instead
-        # of a corpus-proportional Spark job
-        from keystone_spark.fsutil import refresh_index_stats
-
-        refresh_index_stats(
-            self.indexed.sparkSession, path, "corpus", "cell")
-        # centroid JSON rides the same Hadoop FileSystem as the corpus
-        # (file://, hdfs://, bare local all work) — a driver-local
-        # open() here made every non-local path fail at load before the
-        # FS-agnostic compact could even run
-        fs_write_text(
-            self.indexed.sparkSession, f"{path}/centroids.json",
-            json.dumps({"centroids": self.C.tolist(),
-                        "id_col": self.id_col, "vec_col": self.vec_col}),
-        )
-        self.path = path
+    def _meta(self) -> dict:
+        return {"centroids": self.C.tolist(),
+                "id_col": self.id_col, "vec_col": self.vec_col}
 
     @classmethod
-    def load(cls, spark, path: str) -> "IvfIndex":
-        import json
-
-        from keystone_spark.fsutil import (
-            assert_no_interrupted_swap,
-            fs_read_text,
-            resolve_index_path,
-        )
-
-        path = resolve_index_path(spark, path)  # follow _LATEST
-        assert_no_interrupted_swap(spark, path)
-        meta = json.loads(fs_read_text(spark, f"{path}/centroids.json"))
-        indexed = spark.read.parquet(f"{path}/corpus")
+    def _from_meta(cls, meta: dict, indexed: DataFrame,
+                   path: str) -> "IvfIndex":
         return cls(np.asarray(meta["centroids"]), indexed,
                    meta["id_col"], meta["vec_col"], path=path)
 
@@ -1304,7 +1219,7 @@ def pq_topk(
     )
 
 
-class IvfPqIndex:
+class IvfPqIndex(_CellIndex):
     """IVF-PQ: the production ANN composition — IVF cells prune WHICH
     files a search reads (partition pruning, like ``IvfIndex``) and PQ
     codes shrink WHAT each file stores (m uint8 codes per vector instead
@@ -1319,6 +1234,8 @@ class IvfPqIndex:
     FAISS IVFPQ + refine recipe, Spark-first: pruning is Catalyst
     partition pruning, ADC is an Arrow kernel, re-rank is a bounded join.
     """
+
+    TABLE, MODEL_FILE = "codes", "model.json"
 
     def __init__(self, C, books, indexed, id_col="vec_id",
                  vec_col="embedding", path=None, base_path=None):
@@ -1411,264 +1328,6 @@ class IvfPqIndex:
         return data.select(id_col, vec_col).mapInPandas(encode, out_schema)
 
     @classmethod
-    def add(cls, spark, path: str, batch: DataFrame,
-            skip_existing_ids: bool = False) -> dict:
-        """Append new vectors WITHOUT retraining — FAISS
-        ``IndexIVFPQ.add`` semantics: coarse centroids AND PQ codebooks
-        are frozen, the batch is assigned+encoded by the build's own
-        kernel and appended to the cell-partitioned codes table. Search
-        after add is identical to a one-pass encoding of the union
-        under the same model (per-row pure kernels; pinned by test).
-        Same staleness contract as ``IvfIndex.add``: distribution
-        drift degrades cell balance and quantization error — retrain
-        by rebuild; ids must be fresh among live ids (takedowns go
-        through ``delete``), or pass ``skip_existing_ids=True`` for
-        the idempotent form (stored ∪ tombstoned ids anti-joined out
-        before the encode kernel — replay-safe; a deleted id stays
-        un-re-addable until compact, same note as ``IvfIndex.add``).
-        NOTE: the exact re-rank at search time fetches raw vectors
-        from the BASE table the caller passes — it must cover the
-        appended ids too."""
-        import os
-
-        from keystone_spark.fsutil import (
-            acquire_write_lock,
-            assert_latest_unchanged,
-            assert_not_compacting,
-            release_write_lock,
-            resolve_index_path,
-        )
-
-        # mutation lock FIRST (VERDICT r11 #1) — see IvfIndex.add
-        root, path = path, resolve_index_path(spark, path)
-        acquire_write_lock(spark, path)
-        try:
-            assert_latest_unchanged(spark, root, path)
-            assert_not_compacting(spark, path)
-            idx = cls.load(spark, path)
-            # pin the id column to the stored codes-table type, cast
-            # validated (ADVICE r13 #2 — the IvfIndex.add note; the
-            # vec column is not stored here, the encode kernel consumes
-            # it as float64 and fails loudly on garbage)
-            batch = _cast_batch_checked(
-                batch, idx.id_col, idx.vec_col, idx.indexed.schema)
-            if skip_existing_ids:
-                known = idx.indexed.select(idx.id_col)
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    known = known.unionByName(tomb)
-                batch = batch.join(known, idx.id_col, "left_anti")
-            encoded = cls._encode(
-                batch.where(F.col(idx.vec_col).isNotNull()),
-                idx.C, idx.books, idx.id_col, idx.vec_col,
-            )
-            # persist-once (VERDICT r10 #3): histogram collect
-            # materializes the cache, the write reads it back —
-            # assign+encode runs once
-            encoded = encoded.persist()
-            try:
-                cells = {
-                    int(r["cell"]): int(r["n"])
-                    for r in encoded.groupBy("cell").agg(
-                        F.count("*").alias("n")
-                    ).collect()
-                }
-                from keystone_spark.fsutil import (
-                    assert_not_compacting,
-                    assert_same_compact_epoch,
-                    read_compact_epoch,
-                )
-
-                # re-check at the write: a compact listed its input
-                # before this batch existed — committing under it hands
-                # the swap rows it will erase
-                assert_not_compacting(spark, path)
-                entry_epoch = read_compact_epoch(spark, path)
-                # pre-write stats read (r14) — see IvfIndex.add
-                from keystone_spark.fsutil import (
-                    read_valid_index_stats,
-                    refresh_index_stats,
-                    write_index_stats,
-                )
-
-                pre_counts = read_valid_index_stats(
-                    spark, path, "codes", "cell")
-                encoded.write.mode("append").partitionBy("cell").parquet(
-                    os.path.join(path, "codes")
-                )
-                # post-write lock re-check (ADVICE r11 #2) — see
-                # IvfIndex.add: a compact that started during the write
-                # job holds the lock but has not bumped the epoch, so
-                # the epoch fence alone would miss it
-                try:
-                    assert_not_compacting(spark, path)
-                    assert_same_compact_epoch(spark, path, entry_epoch)
-                except ValueError as e:
-                    # re-wrap PRESERVING IndexContention (r13): the
-                    # streaming fold's retry loop keys on the class
-                    from keystone_spark.fsutil import IndexContention
-
-                    raise IndexContention(
-                        str(e) + " — for vector appends, retry with "
-                        "skip_existing_ids=True (surviving rows are "
-                        "skipped, erased ones re-added)"
-                    ) from e
-                # merge batch histogram into the occupancy manifest
-                # (r14) — see IvfIndex.add
-                if pre_counts is not None:
-                    for c, n in cells.items():
-                        pre_counts[c] = pre_counts.get(c, 0) + n
-                    write_index_stats(
-                        spark, path, "codes", "cell", pre_counts)
-                else:
-                    refresh_index_stats(spark, path, "codes", "cell")
-            finally:
-                encoded.unpersist()
-        finally:
-            release_write_lock(spark, path)
-        total = sum(cells.values())
-        return {"vectors_added": total,
-                "cells_touched": len(cells), "cell_histogram": cells,
-                # drift signal — see IvfIndex.add
-                "max_cell_share": round(max(cells.values()) / total, 4)
-                if total else 0.0}
-
-    @classmethod
-    def delete(cls, spark, path: str, ids) -> dict:
-        """Tombstone vectors out of the stored codes table — same
-        contract as ``IvfIndex.delete``: immediate exclusion from
-        search (anti-join on the cell-pruned scan), physical purge at
-        ``compact``."""
-        from keystone_spark.fsutil import (
-            assert_not_compacting,
-            ids_to_tombstones,
-            resolve_index_path,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        assert_not_compacting(spark, path)
-        idx = cls.load(spark, path)
-        id_type = idx.indexed.schema[idx.id_col].dataType
-        from keystone_spark.fsutil import append_tombstones
-
-        tomb = ids_to_tombstones(spark, ids, idx.id_col, id_type)
-        return append_tombstones(spark, path, tomb, root=root)
-
-    @classmethod
-    def compact(cls, spark, path: str, dest: str | None = None) -> dict:
-        """Purge tombstoned codes and rewrite one file per cell dir —
-        ``IvfIndex.compact`` for the codes table; Hadoop-FS
-        stage-and-swap in place, or ``dest=...`` for the
-        object-store-safe fresh-snapshot + ``_LATEST`` pointer flip."""
-        from keystone_spark.fsutil import (
-            SWAP_MARKER,
-            acquire_compact_lock,
-            count_parquet_files,
-            fs_delete,
-            fs_exists,
-            release_compact_lock,
-            resolve_index_path,
-            swap_tables,
-        )
-
-        root, path = path, resolve_index_path(spark, path)
-        if dest is not None and dest.rstrip("/") in (path.rstrip("/"),
-                                                     root.rstrip("/")):
-            raise ValueError(
-                "compact dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        # lock FIRST, load after: the rewrite's file listing and
-        # tombstone read must postdate the lock (see Bm25Index.compact).
-        # The WHOLE post-lock body sits in one try — an analyzer or IO
-        # error anywhere before the swap must release the lock, or it
-        # leaks and blocks every later mutation
-        acquire_compact_lock(spark, path)
-        if dest is not None:
-            try:
-                from keystone_spark.fsutil import (
-                    assert_no_write_lock,
-                    pointer_target,
-                    write_latest_pointer,
-                )
-
-                assert_no_write_lock(spark, path)
-                idx = cls.load(spark, path)
-                codes = idx.indexed
-                tomb = idx._load_tombstones(spark)
-                if tomb is not None:
-                    codes = codes.join(
-                        F.broadcast(tomb), idx.id_col, "left_anti"
-                    )
-                cls(idx.C, idx.books,
-                    codes.repartition(F.col("cell")),
-                    idx.id_col, idx.vec_col,
-                    base_path=idx.base_path).save(dest)
-                if count_parquet_files(spark, f"{dest}/codes") == 0:
-                    fs_delete(spark, dest)
-                    raise ValueError(
-                        "compact aborted: every vector is tombstoned "
-                        "and the rewritten codes table at dest would "
-                        "be empty — delete the index instead of "
-                        "compacting it empty"
-                    )
-                ptr = write_latest_pointer(spark, root,
-                                           pointer_target(root, dest))
-            finally:
-                release_compact_lock(spark, path)
-            return {"dest": dest, "pointer_version": ptr,
-                    "codes_files_after": count_parquet_files(
-                        spark, f"{dest}/codes")}
-        stage = f"{path.rstrip('/')}/_compact_tmp"
-        try:
-            # compact's half of the mutation-lock handshake (r12)
-            from keystone_spark.fsutil import assert_no_write_lock
-
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            codes = idx.indexed
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                codes = codes.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
-            fs_delete(spark, stage)
-            (
-                codes.repartition(F.col("cell"))
-                .write.mode("overwrite").partitionBy("cell")
-                .parquet(f"{stage}/codes")
-            )
-            if count_parquet_files(spark, f"{stage}/codes") == 0:
-                fs_delete(spark, stage)
-                raise ValueError(
-                    "compact aborted: every vector is tombstoned, and "
-                    "the staged rewrite would leave an empty codes "
-                    "table that no reader can load (parquet schema "
-                    "inference fails on a file-less directory) — the "
-                    "live index is untouched; delete the index "
-                    "directory instead of compacting it empty"
-                )
-            before = count_parquet_files(spark, f"{path}/codes")
-            swap_tables(spark, path, stage, ["codes"])
-            fs_delete(spark, f"{path}/tombstones")
-        except BaseException:
-            if not fs_exists(spark, f"{stage}/{SWAP_MARKER}"):
-                release_compact_lock(spark, path)
-            raise
-        from keystone_spark.fsutil import (
-            bump_compact_epoch,
-            refresh_index_stats,
-        )
-
-        bump_compact_epoch(spark, path)  # the mutation commit fence
-        # re-sync the occupancy manifest to the rewritten table (r14)
-        refresh_index_stats(spark, path, "codes", "cell")
-        release_compact_lock(spark, path)
-        return {"codes_files_before": before,
-                "codes_files_after": count_parquet_files(
-                    spark, f"{path}/codes")}
-
-    @classmethod
     def retrain(cls, spark, path: str, dest: str,
                 base: "DataFrame | None" = None,
                 n_cells: int | None = None, m: int | None = None,
@@ -1697,29 +1356,10 @@ class IvfPqIndex:
         to stop. A ``base`` DataFrame is taken as-is (nothing to
         validate against) and the manifest pointer is carried forward
         unchanged."""
-        from keystone_spark.fsutil import (
-            acquire_compact_lock,
-            assert_no_write_lock,
-            count_parquet_files,
-            fs_delete,
-            pointer_target,
-            release_compact_lock,
-            resolve_index_path,
-            write_latest_pointer,
-        )
 
-        root, path = path, resolve_index_path(spark, path)
-        if dest.rstrip("/") in (path.rstrip("/"), root.rstrip("/")):
-            raise ValueError(
-                "retrain dest must be a NEW index path — not the "
-                "current snapshot, and not the pointer root itself"
-            )
-        acquire_compact_lock(spark, path)
-        try:
-            assert_no_write_lock(spark, path)
-            idx = cls.load(spark, path)
-            new_base_path = idx.base_path
-            if base is None:
+        def fit(idx):
+            src, new_base_path = base, idx.base_path
+            if src is None:
                 bp = base_path or idx.base_path
                 if bp is None:
                     raise ValueError(
@@ -1741,117 +1381,43 @@ class IvfPqIndex:
                         "(CLI: --force-base) only after confirming the "
                         "base really moved"
                     )
-                base = spark.read.parquet(bp)
+                src = spark.read.parquet(bp)
                 new_base_path = bp
-            live_ids = idx.indexed.select(idx.id_col)
-            tomb = idx._load_tombstones(spark)
-            if tomb is not None:
-                live_ids = live_ids.join(
-                    F.broadcast(tomb), idx.id_col, "left_anti"
-                )
             live = (
-                base.where(F.col(idx.vec_col).isNotNull())
-                .join(live_ids, idx.id_col, "left_semi")
+                src.where(F.col(idx.vec_col).isNotNull())
+                .join(idx._live(spark).select(idx.id_col), idx.id_col,
+                      "left_semi")
             )
             k = int(n_cells) if n_cells is not None else len(idx.C)
             mm = int(m) if m is not None else idx.books.shape[0]
             kk = int(ks) if ks is not None else idx.books.shape[1]
-            # hash-ordered sample across the whole live id range — see
-            # IvfIndex.retrain
-            samp = np.array(
-                [
-                    r[1]
-                    for r in live.select(idx.id_col, idx.vec_col)
-                    .orderBy(F.xxhash64(F.col(idx.id_col)))
-                    .limit(sample_size)
-                    .collect()
-                ],
-                dtype=np.float64,
-            )
-            if len(samp) == 0:
-                raise ValueError(
-                    "retrain aborted: no live vectors in base — check "
-                    "that base covers the index's ids"
-                )
-            sn = _normalize(samp)
-            C = _normalize(_kmeans_centroids(sn, k, seed))
-            books = _train_pq_codebooks(sn, mm, kk, seed)
-            reencoded = cls._encode(live, C, books, idx.id_col,
-                                    idx.vec_col)
-            cls(C, books, reencoded.repartition(F.col("cell")),
-                idx.id_col, idx.vec_col,
-                base_path=new_base_path).save(dest)
-            if count_parquet_files(spark, f"{dest}/codes") == 0:
-                fs_delete(spark, dest)
-                raise ValueError(
-                    "retrain aborted: the live corpus is empty — "
-                    "nothing to train on"
-                )
-            hist = {
-                int(r["cell"]): int(r["n"])
-                for r in spark.read.parquet(f"{dest}/codes")
-                .groupBy("cell").agg(F.count("*").alias("n")).collect()
-            }
-            ptr = write_latest_pointer(spark, root,
-                                       pointer_target(root, dest))
-        finally:
-            release_compact_lock(spark, path)
-        # n_cells = centroids actually trained (ADVICE r12 #4 parity
-        # with IvfIndex.retrain): a sample smaller than k yields fewer
-        return {"dest": dest, "pointer_version": ptr, "n_cells": len(C),
-                "m": mm, "ks": kk, "vectors": sum(hist.values()),
-                "cell_histogram": hist}
 
-    def _load_tombstones(self, spark) -> DataFrame | None:
-        from keystone_spark.fsutil import read_tombstones
+            def train(sn):
+                C = _normalize(_kmeans_centroids(sn, k, seed))
+                books = _train_pq_codebooks(sn, mm, kk, seed)
+                return cls(C, books, None, idx.id_col, idx.vec_col,
+                           base_path=new_base_path)
 
-        if self.path is None:
-            return None
-        return read_tombstones(spark, self.path, self.id_col)
+            return live, train, {"m": mm, "ks": kk}
 
-    def save(self, path: str) -> None:
-        import json
+        return cls._retrain(spark, path, dest, sample_size, fit)
 
-        from keystone_spark.fsutil import (
-            clear_index_control_state,
-            fs_write_text,
-        )
+    def _kernel(self, data: DataFrame) -> DataFrame:
+        return self._encode(data, self.C, self.books, self.id_col,
+                            self.vec_col)
 
-        clear_index_control_state(self.indexed.sparkSession, path)
-        self.indexed.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/codes"
-        )
-        # manifest-carried occupancy (r14) — see IvfIndex.save
-        from keystone_spark.fsutil import refresh_index_stats
-
-        refresh_index_stats(
-            self.indexed.sparkSession, path, "codes", "cell")
-        fs_write_text(
-            self.indexed.sparkSession, f"{path}/model.json",
-            json.dumps({
-                "centroids": self.C.tolist(),
-                "books": self.books.tolist(),
-                "id_col": self.id_col,
-                "vec_col": self.vec_col,
-                "base_path": self.base_path,
-            }),
-        )
-        self.path = path
+    def _meta(self) -> dict:
+        return {
+            "centroids": self.C.tolist(),
+            "books": self.books.tolist(),
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "base_path": self.base_path,
+        }
 
     @classmethod
-    def load(cls, spark, path: str) -> "IvfPqIndex":
-        import json
-
-        from keystone_spark.fsutil import (
-            assert_no_interrupted_swap,
-            fs_read_text,
-            resolve_index_path,
-        )
-
-        path = resolve_index_path(spark, path)  # follow _LATEST
-        assert_no_interrupted_swap(spark, path)
-        meta = json.loads(fs_read_text(spark, f"{path}/model.json"))
-        indexed = spark.read.parquet(f"{path}/codes")
+    def _from_meta(cls, meta: dict, indexed: DataFrame,
+                   path: str) -> "IvfPqIndex":
         return cls(
             np.asarray(meta["centroids"]),
             np.asarray(meta["books"]),

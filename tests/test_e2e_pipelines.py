@@ -5,9 +5,13 @@ solve chain (RandomPatchCifar shape), a text n-gram classification chain
 (TimitPipeline shape). Each asserts an accuracy floor on synthetic,
 seeded data — the reference's smoke-test pattern (SURVEY §5.4)."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RNG = np.random.default_rng(31)
 
@@ -298,7 +302,7 @@ def test_maintain_app_cli(spark, tmp_path):
         return subprocess.Popen(
             [sys.executable, "-m", "keystone_spark.apps.maintain", *argv],
             stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-            cwd="/root/repo",
+            cwd=REPO,
         )
 
     procs = {
@@ -352,7 +356,7 @@ def test_maintain_index_delete_cli(spark, tmp_path):
     def run(*argv):
         return subprocess.run(
             [sys.executable, "-m", "keystone_spark.apps.maintain", *argv],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=REPO,
         )
 
     e = load_table(spark, "embeddings", "/root/testdata/sf0.001")

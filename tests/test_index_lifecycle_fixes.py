@@ -5,6 +5,7 @@ double-counts, compact-to-empty bricking, and the mid-swap compact
 crash window (intent marker + finish_swap repair)."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -12,6 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from keystone_spark.sources import load_table
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog again and again"),
@@ -204,6 +207,8 @@ def test_compact_to_empty_aborts_and_leaves_index_live(spark, tmp_path):
     with pytest.raises(ValueError, match="tombstoned"):
         Bm25Index.compact(spark, p)
     assert Bm25Index.load(spark, p).params["n_docs"] == 4  # untouched
+    # the abort released the compact lock: a mutation goes through
+    assert Bm25Index.delete(spark, p, [1])["tombstones_added"] == 1
 
     p = str(tmp_path / "mh")
     build_minhash_index(corpus, p, n_hashes=64, n_bands=16)
@@ -211,6 +216,7 @@ def test_compact_to_empty_aborts_and_leaves_index_live(spark, tmp_path):
     with pytest.raises(ValueError, match="tombstoned"):
         compact_minhash_index(spark, p)
     assert spark.read.parquet(f"{p}/bands").count() > 0  # untouched
+    assert delete_from_minhash_index(spark, p, [1])["tombstones_added"] == 1
 
     e = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     for fam, tbl in ((IvfIndex, "corpus"), (IvfPqIndex, "codes")):
@@ -220,6 +226,8 @@ def test_compact_to_empty_aborts_and_leaves_index_live(spark, tmp_path):
         with pytest.raises(ValueError, match="tombstoned"):
             fam.compact(spark, p)
         fam.load(spark, p)  # still loadable
+        assert fam.delete(
+            spark, p, e.select("vec_id").limit(1))["tombstones_added"] == 1
 
 
 def test_interrupted_compact_swap_detected_and_repairable(
@@ -310,7 +318,7 @@ def test_maintain_index_repair_cli(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "keystone_spark.apps.maintain",
          "index-repair", "--path", str(tmp_path / "nothing")],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     stats = json.loads(r.stdout.strip().splitlines()[-1])
@@ -380,16 +388,16 @@ def test_rebuild_clears_stale_tombstones_and_stage(spark, tmp_path):
         assert idx._load_tombstones(spark) is None
 
 
-@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
+@pytest.mark.parametrize("crash_at", [1, 2, 3, 4, 5])
 def test_bm25_swap_crash_at_every_position_is_repairable(
     spark, tmp_path, monkeypatch, crash_at
 ):
     """Exhaustive crash points: rename call 1 is the marker's atomic
     tmp->final rename (killed there, the destructive phase never
     started — the live PRE-compact index keeps serving and repair
-    needs force_unlock); calls 2-4 are the table renames (postings,
-    df, params) — killed before any of them, the reader refuses the
-    index and finish_swap restores survivor-rebuild identity."""
+    needs force_unlock); calls 2-5 are the table renames (postings,
+    df, docs, params) — killed before any of them, the reader refuses
+    the index and finish_swap restores survivor-rebuild identity."""
     from keystone_spark import fsutil
     from keystone_spark.operators.nlp import Bm25Index
 
@@ -514,6 +522,64 @@ def test_minhash_swap_crash_at_every_position_is_repairable(
         spark, path, probe3, corpus, n_hashes=64, n_bands=16
     ).collect()
     assert [(r.doc_id, r.dup_of) for r in out3] == [(101, 3)]
+
+
+@pytest.mark.parametrize("crash_at", [1, 2])
+@pytest.mark.parametrize("family", ["ivf", "ivfpq"])
+def test_vector_swap_crash_at_every_position_is_repairable(
+    spark, sf_dir, tmp_path, monkeypatch, family, crash_at
+):
+    """Same sweep for IvfIndex / IvfPqIndex, whose in-place compact
+    swaps one table: rename call 1 is the marker (live pre-compact
+    index keeps serving; force-unlock cleanup, then a retry
+    completes), call 2 the table (the reader refuses the index and
+    finish_swap completes the swap). Either way search ends equal to
+    the survivor search."""
+    from keystone_spark import fsutil
+    from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex
+
+    fam = {"ivf": IvfIndex, "ivfpq": IvfPqIndex}[family]
+    e = load_table(spark, "embeddings", sf_dir)
+    probes = e.orderBy("vec_id").limit(3)
+    path = str(tmp_path / f"{family}_c{crash_at}")
+    fam.build(e, n_cells=4).save(path)
+    fam.delete(spark, path,
+               e.where(F.col("vec_id") % 5 == 0).select("vec_id"))
+
+    def search():
+        idx = fam.load(spark, path)
+        out = (idx.search(probes, k=5) if fam is IvfIndex
+               else idx.search(e, probes, k=5))
+        return sorted((r.probe, r.vec_id, round(r.cos, 9))
+                      for r in out.collect())
+
+    survivors = search()  # the tombstones already hide the victims
+    assert survivors and all(r[1] % 5 for r in survivors)
+
+    real_rename = fsutil.fs_rename
+    calls = {"n": 0}
+
+    def dying_rename(spark_, src, dst):
+        calls["n"] += 1
+        if calls["n"] == crash_at:
+            raise RuntimeError("boom")
+        real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "fs_rename", dying_rename)
+    with pytest.raises(RuntimeError):
+        fam.compact(spark, path)
+    monkeypatch.setattr(fsutil, "fs_rename", real_rename)
+
+    if crash_at == 1:
+        assert search() == survivors  # live pre-compact index serves
+        fsutil.finish_swap(spark, path, force_unlock=True)
+        fam.compact(spark, path)  # retry completes normally
+    else:
+        with pytest.raises(ValueError, match="interrupted compact"):
+            fam.load(spark, path)
+        fsutil.finish_swap(spark, path)
+    assert not fsutil.fs_exists(spark, f"{path}/tombstones")  # purged
+    assert search() == survivors
 
 
 @pytest.mark.slow

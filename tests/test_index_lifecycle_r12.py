@@ -8,6 +8,7 @@ IVF/IVFPQ retrain (VERDICT r11 #4), the no-absence-window epoch fence
 narrowed lock-error catch (ADVICE r11)."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -17,6 +18,8 @@ from pyspark.sql import functions as F
 
 from keystone_spark import fsutil
 from keystone_spark.sources import load_table
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog again and again"),
@@ -730,7 +733,7 @@ def test_maintain_cli_dest_compact_and_minhash_custom_id(spark, tmp_path):
         [sys.executable, "-m", "keystone_spark.apps.maintain",
          "index-compact", "--path", root, "--kind", "minhash",
          "--dest", v1],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     out = json.loads(r.stdout.strip().splitlines()[-1])
@@ -749,7 +752,7 @@ def test_maintain_cli_dest_compact_and_minhash_custom_id(spark, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "keystone_spark.apps.maintain",
          "index-gc", "--path", root],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     out = json.loads(r.stdout.strip().splitlines()[-1])
