@@ -13,6 +13,7 @@ COUNT/ROW_NUMBER/LEN are all BIGINT).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1049,7 +1050,25 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQ8_INDEX_CACHE: dict = {}
+_INDEX_MEMO: dict = {}
+_INDEX_MEMO_LOCKS: dict = {}
+_INDEX_MEMO_GUARD = threading.Lock()
+
+
+def _memo_index(kind: str, spark: SparkSession, sf_dir: str,
+                build: Callable[[], str]) -> str:
+    """The path of the stored index ``build()`` makes for (kind,
+    session, sf_dir), built on first use and reused by every later
+    call. Thread-safe: queries run on a thread pool, and a per-key lock
+    makes the check-then-set atomic, so ``build`` runs once per key
+    while different indexes still build in parallel."""
+    key = (kind, id(getattr(spark, "_jsparkSession", spark)), sf_dir)
+    with _INDEX_MEMO_GUARD:
+        lock = _INDEX_MEMO_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        if key not in _INDEX_MEMO:
+            _INDEX_MEMO[key] = build()
+        return _INDEX_MEMO[key]
 
 
 def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1069,13 +1088,13 @@ def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 10)
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _SQ8_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = tempfile.mkdtemp(prefix="sq8_index_")
         Sq8Index.build(e).save(path)
-        _SQ8_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("sq8", spark, sf_dir, build)
     idx = Sq8Index.load(spark, path)
     out = idx.search(e, probes, k=10, refine=4)
     return (
@@ -1120,13 +1139,13 @@ def q_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 3)
     pred = F.col("label") % 3 == 0
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVFPQ_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = tempfile.mkdtemp(prefix="ivfpq_index_")
         IvfPqIndex.build(e, n_cells=16, m=16, ks=32).save(path)
-        _IVFPQ_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("ivfpq", spark, sf_dir, build)
     idx = IvfPqIndex.load(spark, path)
     out = idx.search(e, probes, k=10, n_probe_cells=8, refine=8,
                      predicate=pred, metadata=e)
@@ -1314,9 +1333,6 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_INDEX_CACHE: dict = {}
-
-
 def q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production IVF path: fit-once IvfIndex persisted PARTITIONED BY
     cell, reloaded, searched with partition pruning — each search scans
@@ -1337,13 +1353,13 @@ def q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files, not vacuously all of them; min recall@10 at this config is
     # 6/10 (seeded, deterministic).
     probes = e.where(F.col("vec_id") < 3)
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = tempfile.mkdtemp(prefix="ivf_index_")
         IvfIndex.build(e, n_cells=16).save(path)
-        _IVF_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("ivf", spark, sf_dir, build)
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=6)
 
@@ -1414,15 +1430,14 @@ def q_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 3)
     pred = F.col("label") % 3 == 0
-    # same build as q_ivf_index_topk -> shared cache key: one persisted
+    # same build as q_ivf_index_topk -> shared memo kind: one persisted
     # index serves both the unfiltered and the filtered search query
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
+    def build():
         path = tempfile.mkdtemp(prefix="ivf_index_")
         IvfIndex.build(e, n_cells=16).save(path)
-        _IVF_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("ivf", spark, sf_dir, build)
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=8,
                      predicate=pred, metadata=e)
@@ -1521,10 +1536,8 @@ def q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 3)
     deleted = F.col("vec_id") % 7 == 2
-    key = ("ivfdel", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = tempfile.mkdtemp(prefix="ivf_del_")
         IvfIndex.build(e, n_cells=16).save(path)
         stats = IvfIndex.delete(
@@ -1532,7 +1545,9 @@ def q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if stats["tombstones_added"] <= 0:
             raise AssertionError(f"ivf delete did not land: {stats}")
-        _IVF_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("ivfdel", spark, sf_dir, build)
     idx = IvfIndex.load(spark, path)
     out = idx.search(probes, k=10, n_probe_cells=6)
 
@@ -1606,10 +1621,8 @@ def q_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 3)
     deleted = F.col("vec_id") % 7 == 3
-    key = ("ivfrt", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    root = _IVF_INDEX_CACHE.get(key)
-    if root is None:
+
+    def build():
         root = tempfile.mkdtemp(prefix="ivf_retrain_")
         IvfIndex.build(e, n_cells=16).save(f"{root}/v0")
         write_latest_pointer(spark, root, "v0")
@@ -1621,7 +1634,9 @@ def q_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         rstats = IvfIndex.retrain(spark, root, f"{root}/v1")
         if rstats["pointer_version"] <= 1 or rstats["n_cells"] != 16:
             raise AssertionError(f"retrain did not land: {rstats}")
-        _IVF_INDEX_CACHE[key] = root
+        return root
+
+    root = _memo_index("ivfrt", spark, sf_dir, build)
     if read_latest_pointer(spark, root) != "v1":
         raise AssertionError(
             "retrain did not flip the _LATEST pointer: "
@@ -1714,10 +1729,8 @@ def q_ivf_stream_autoretrain_topk(spark: SparkSession, sf_dir: str
     probes = e.where(F.col("vec_id") < 3)
     even = F.col("vec_id") % 2 == 0
     deleted = even & (F.col("vec_id") % 7 == 5)
-    key = ("ivfstream", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    root = _IVF_INDEX_CACHE.get(key)
-    if root is None:
+
+    def build():
         root = tempfile.mkdtemp(prefix="ivf_stream_")
         IvfIndex.build(e.where(even), n_cells=16).save(f"{root}/v0")
         write_latest_pointer(spark, root, "v0")
@@ -1748,7 +1761,9 @@ def q_ivf_stream_autoretrain_topk(spark: SparkSession, sf_dir: str
         ).parquet(f"{src}/*")
         stream_vector_ingest(stream, root, family="ivf",
                              retrain_if_skewed=0.0)
-        _IVF_INDEX_CACHE[key] = root
+        return root
+
+    root = _memo_index("ivfstream", spark, sf_dir, build)
     ptr = read_latest_pointer(spark, root)
     if not (ptr or "").startswith("retrain_e"):
         raise AssertionError(
@@ -2876,9 +2891,6 @@ def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_INDEX_CACHE: dict = {}
-
-
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ production ANN (operators/similarity.IvfPqIndex): persisted
     cell-partitioned PQ codes (16x smaller than raw vectors) + pruned
@@ -2891,13 +2903,13 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 10)
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _IVFPQ_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = tempfile.mkdtemp(prefix="ivfpq_index_")
         IvfPqIndex.build(e, n_cells=16, m=16, ks=32).save(path)
-        _IVFPQ_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("ivfpq", spark, sf_dir, build)
     idx = IvfPqIndex.load(spark, path)
     out = idx.search(e, probes, k=10, n_probe_cells=8, refine=8)
     exact = cosine_topk(e, probes, k=10)
@@ -3556,9 +3568,6 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rk")
 
 
-_BM25_INDEX_CACHE: dict = {}
-
-
 def _bm25_index_path(sf_dir: str, variant: str) -> str:
     """Deterministic, overwrite-semantics index location (VERDICT r9
     #5): ``.localdata/indexes/`` under the repo (gitignored), keyed by
@@ -3597,13 +3606,13 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession")
-           else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = _bm25_index_path(sf_dir, "bm25")
         Bm25Index.build(d, k1=1.2, b=0.75, n_term_buckets=64).save(path)
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("bm25", spark, sf_dir, build)
     idx = Bm25Index.load(spark, path)
     qs = d.where(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("query_id"), F.slice("toks", 1, 5).alias("q_toks")
@@ -3651,10 +3660,8 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25inc", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = _bm25_index_path(sf_dir, "bm25inc")
         Bm25Index.build(
             d.where(F.col("doc_id") % 2 == 0), k1=1.2, b=0.75,
@@ -3665,7 +3672,9 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if stats["generation"] != 1 or stats["batch_docs"] <= 0:
             raise AssertionError(f"bm25 append did not land: {stats}")
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("bm25inc", spark, sf_dir, build)
     idx = Bm25Index.load(spark, path)
     qs = d.where(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("query_id"), F.slice("toks", 1, 5).alias("q_toks")
@@ -3701,10 +3710,8 @@ def q_bm25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25stream", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = _bm25_index_path(sf_dir, "bm25stream")
         Bm25Index.build(
             d.where(F.col("doc_id") % 2 == 0), k1=1.2, b=0.75,
@@ -3723,7 +3730,9 @@ def q_bm25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{src}/*")
         )
         stream_bm25_ingest(stream, path, compact_every_n=2)
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("bm25stream", spark, sf_dir, build)
     idx = Bm25Index.load(spark, path)
     n_all = d.count()
     if idx.params["n_docs"] != n_all:
@@ -3771,10 +3780,8 @@ def q_bm25_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25del", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = _bm25_index_path(sf_dir, "bm25del")
         Bm25Index.build(d, k1=1.2, b=0.75, n_term_buckets=64).save(path)
         stats = Bm25Index.delete(
@@ -3783,7 +3790,9 @@ def q_bm25_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         if stats["tombstones_added"] <= 0:
             raise AssertionError(f"bm25 delete did not land: {stats}")
         Bm25Index.compact(spark, path)
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("bm25del", spark, sf_dir, build)
     idx = Bm25Index.load(spark, path)
     if idx.params["incomplete_generations"]:
         raise AssertionError(
@@ -3843,10 +3852,8 @@ def q_bm25_pointer_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     )
-    key = ("bm25ptr", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    root = _BM25_INDEX_CACHE.get(key)
-    if root is None:
+
+    def build():
         root = _bm25_index_path(sf_dir, "bm25ptr")
         fs_delete(spark, root)  # stale root (old pointer) from a
         # previous harness session must not redirect the fresh build
@@ -3868,7 +3875,9 @@ def q_bm25_pointer_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         cstats = Bm25Index.compact(spark, root, dest=f"{root}/v1")
         if cstats["dest"] != f"{root}/v1":
             raise AssertionError(f"dest compact did not land: {cstats}")
-        _BM25_INDEX_CACHE[key] = root
+        return root
+
+    root = _memo_index("bm25ptr", spark, sf_dir, build)
     if read_latest_pointer(spark, root) != "v1":
         raise AssertionError(
             "dest compact did not flip the _LATEST pointer: "
@@ -5381,10 +5390,8 @@ def q_incremental_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_parallelism(_t(spark, sf_dir, "documents"))
     corpus = d.where(F.col("doc_id") % 4 != 0)
     batch = d.where(F.col("doc_id") % 4 == 0)
-    key = ("mh_inc", id(spark._jsparkSession)
-           if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    path = _BM25_INDEX_CACHE.get(key)
-    if path is None:
+
+    def build():
         path = _bm25_index_path(sf_dir, "minhash_inc")
         mid = corpus.agg(F.max("doc_id")).first()[0] // 2
         build_minhash_index(
@@ -5400,7 +5407,9 @@ def q_incremental_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the add==rebuild identity is what the SQL oracle checks
         if stats["batch_docs"] <= 0:
             raise AssertionError(f"minhash append saw no batch: {stats}")
-        _BM25_INDEX_CACHE[key] = path
+        return path
+
+    path = _memo_index("mh_inc", spark, sf_dir, build)
     out = match_minhash_index(
         spark, path, batch, corpus, n_hashes=64, n_bands=16, threshold=0.8
     )

@@ -20,13 +20,18 @@ dest and the commit is one atomic versioned ``_LATEST.N`` pointer
 publish (``write_latest_pointer`` / ``resolve_index_path`` below) —
 no rename of live data at all.
 
-The four families share one compact and one delete protocol:
-``compact_index`` and ``delete_from_index`` below. A family supplies
-only its main table, partition column, rewrite hook and stored id
-field.
+The four families share one lifecycle. Every add and delete runs
+inside ``mutation_span`` below: resolve the snapshot, take the write
+lock, re-check the pointer, refuse while compacting, read the entry
+epoch, and fence the commit. ``delete_from_index`` and
+``compact_index`` hold the delete and compact protocols. A family
+supplies only its own writes, main table, partition column, rewrite
+hook and stored id field.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 
 def _fs_path(spark, path: str):
@@ -580,6 +585,27 @@ def resolve_index_path(spark, path: str) -> str:
     return f"{path.rstrip('/')}/{t}"
 
 
+def _lock_current_snapshot(spark, root: str, who: str) -> str:
+    """Take the compact lock of ``root``'s CURRENT snapshot and return
+    that snapshot (resolve-lock-recheck): a dest-compact that flips the
+    pointer between the resolve and the lock would leave the caller
+    holding the ORPHANED snapshot's lock (a fresh dest-compact would
+    lock the new current and race the caller again) — so re-resolve
+    under the lock and move to the new current if it changed. Calls
+    the module-level ``acquire_compact_lock`` so tests can patch it."""
+    for _ in range(5):
+        cur_snapshot = resolve_index_path(spark, root)
+        acquire_compact_lock(spark, cur_snapshot)
+        if resolve_index_path(spark, root) == cur_snapshot:
+            return cur_snapshot
+        release_compact_lock(spark, cur_snapshot)
+    raise IndexContention(
+        f"the index at {root} is being republished faster than "
+        f"{who} can lock it — retry when the compact/retrain churn "
+        "settles"
+    )
+
+
 def publish_pointer(spark, root: str, target: str) -> dict:
     """Validated, GC-safe manual pointer publish — the `maintain
     index-publish` implementation (ADVICE r12 #2: the bare
@@ -593,8 +619,8 @@ def publish_pointer(spark, root: str, target: str) -> dict:
     - the resolved target directory must EXIST (and, relative form,
       live under the root);
     - when a pointer already exists, the flip runs under the current
-      snapshot's compact lock with the same resolve-lock-recheck loop
-      as ``gc_snapshots`` — publish and GC serialize on one lock, so
+      snapshot's compact lock, taken by ``_lock_current_snapshot`` as
+      in ``gc_snapshots`` — publish and GC serialize on one lock, so
       neither can invalidate the other's view mid-operation. A root
       with NO pointer yet (first publish) has no current snapshot to
       lock and nothing GC would touch (GC refuses pointer-less roots),
@@ -611,18 +637,7 @@ def publish_pointer(spark, root: str, target: str) -> dict:
     if prev is None:
         v = write_latest_pointer(spark, root, target)
         return {"target": target, "pointer_version": v, "previous": None}
-    for _ in range(5):
-        cur_snapshot = resolve_index_path(spark, root)
-        acquire_compact_lock(spark, cur_snapshot)
-        if resolve_index_path(spark, root) == cur_snapshot:
-            break
-        release_compact_lock(spark, cur_snapshot)
-    else:
-        raise IndexContention(
-            f"the index at {root} is being republished faster than "
-            "publish can lock it — retry when the compact/retrain "
-            "churn settles"
-        )
+    cur_snapshot = _lock_current_snapshot(spark, root, "publish")
     try:
         # re-validate the target UNDER the lock (ADVICE r13 #1): the
         # pre-lock existence check races a concurrent gc_snapshots that
@@ -689,23 +704,7 @@ def gc_snapshots(spark, root: str, keep_last: int = 0,
     if dry_run:
         cur_snapshot = None
     else:
-        # resolve-lock-recheck: a dest-compact that flips between the
-        # resolve and the lock leaves GC holding the ORPHANED
-        # snapshot's lock (a fresh dest-compact would lock the new
-        # current and race the deletes again) — so re-resolve under
-        # the lock and move to the new current if it changed
-        for _ in range(5):
-            cur_snapshot = resolve_index_path(spark, root)
-            acquire_compact_lock(spark, cur_snapshot)
-            if resolve_index_path(spark, root) == cur_snapshot:
-                break
-            release_compact_lock(spark, cur_snapshot)
-        else:
-            raise IndexContention(
-                f"the index at {root} is being republished faster than "
-                "GC can lock it — retry when the compact/retrain churn "
-                "settles"
-            )
+        cur_snapshot = _lock_current_snapshot(spark, root, "GC")
     try:
         cur = read_latest_pointer(spark, root)
         r = root.rstrip("/")
@@ -919,38 +918,67 @@ def ids_to_tombstones(spark, ids, id_col: str, id_type) -> "object":
     )
 
 
-def append_tombstones(spark, path: str, tomb, root: str | None = None
-                      ) -> dict:
-    """The shared commit tail of every index family's ``delete``:
-    persist the normalized tombstone frame once across the write and
-    the count, and RE-CHECK the compact lock immediately before the
-    append — a compact past its tombstone read would fs_delete this
-    append unapplied (a takedown reporting success while the document
-    is resurrected). One implementation so the four families' delete
-    semantics cannot drift (the check-then-append window that remains
-    is the write job itself; see the epoch note on
-    assert_not_compacting)."""
-    # mutation lock first, compact check second (the deadlock-free
-    # handshake on acquire_write_lock): serializes deletes against
-    # adds and other deletes for the whole intent->commit span
-    acquire_write_lock(spark, path)
+@contextmanager
+def mutation_span(spark, path: str):
+    """The write-lock span every index mutation runs inside: each
+    family's ``add`` and the shared ``delete_from_index``. It resolves
+    ``path`` to its current snapshot (a dest-compact or retrain may
+    have republished it under a ``_LATEST`` pointer), takes that
+    snapshot's write lock, and only then re-checks the pointer
+    (``assert_latest_unchanged``) and refuses while a compact holds its
+    lock — mutation lock first, compact check second is the
+    deadlock-free handshake documented on ``acquire_write_lock``. The
+    compact epoch is read at entry.
+
+    Yields ``(snapshot, fence)``. ``fence()`` re-checks the compact
+    lock and the entry epoch (``assert_same_compact_epoch``). Call it
+    right before the write: a compact that listed its input before this
+    batch existed would be handed rows its swap erases. Call it again
+    after the write, before the commit: the lock check catches a
+    compact that started during the write (the longest phase) and still
+    runs, the epoch check one that started AND finished inside it.
+    Either way the mutation aborts uncommitted and a retry is safe. The
+    write lock is released on every exit, early returns and errors
+    included."""
+    root, snap = path, resolve_index_path(spark, path)
+    acquire_write_lock(spark, snap)
     try:
-        if root is not None:
-            # ``path`` is a resolved snapshot of ``root`` — re-check
-            # the pointer under the lock (see assert_latest_unchanged)
-            assert_latest_unchanged(spark, root, path)
-        e0 = read_compact_epoch(spark, path)
-        tomb = tomb.persist()
+        assert_latest_unchanged(spark, root, snap)
+        assert_not_compacting(spark, snap)
+        entry_epoch = read_compact_epoch(spark, snap)
+
+        def fence():
+            assert_not_compacting(spark, snap)
+            assert_same_compact_epoch(spark, snap, entry_epoch)
+
+        yield snap, fence
+    finally:
+        release_write_lock(spark, snap)
+
+
+def delete_from_index(spark, path: str, ids, id_field) -> dict:
+    """The delete protocol every index family shares, inside
+    ``mutation_span``: normalize ``ids`` to the stored id type and
+    append them to ``{snapshot}/tombstones`` as one parquet commit.
+    ``id_field(snapshot)`` returns the family's stored id
+    ``StructField`` — its name and type key the tombstone frame, so the
+    readers' anti-joins always line up. The frame is persisted once
+    across the write and the count, and fenced before the append: a
+    compact past its tombstone read would delete this append unapplied
+    (a takedown reporting success while the document is resurrected)."""
+    with mutation_span(spark, path) as (snap, fence):
+        field = id_field(snap)
+        tomb = ids_to_tombstones(spark, ids, field.name,
+                                 field.dataType).persist()
         try:
-            assert_not_compacting(spark, path)
+            fence()
             tomb.coalesce(1).write.mode("append").parquet(
-                f"{path}/tombstones"
+                f"{snap}/tombstones"
             )
             # fence AFTER the append: a compact that ran during the
             # write already dropped the tombstone file unapplied —
             # report the failure instead of success
-            assert_not_compacting(spark, path)
-            assert_same_compact_epoch(spark, path, e0)
+            fence()
             # the count is INTENTIONALLY post-fence: it doubles as the
             # success signal (a fence abort must not report a
             # tombstone count), and the write above already
@@ -960,23 +988,7 @@ def append_tombstones(spark, path: str, tomb, root: str | None = None
             n = tomb.count()
         finally:
             tomb.unpersist()
-    finally:
-        release_write_lock(spark, path)
     return {"tombstones_added": n}
-
-
-def delete_from_index(spark, path: str, ids, id_field) -> dict:
-    """The delete protocol every index family shares: resolve the
-    current snapshot, refuse while a compact holds the lock, normalize
-    ``ids`` to the stored id type, and append them as tombstones
-    (``append_tombstones``). ``id_field(snapshot)`` returns the
-    family's stored id ``StructField`` — its name and type key the
-    tombstone frame, so the readers' anti-joins always line up."""
-    root, path = path, resolve_index_path(spark, path)
-    assert_not_compacting(spark, path)
-    field = id_field(path)
-    tomb = ids_to_tombstones(spark, ids, field.name, field.dataType)
-    return append_tombstones(spark, path, tomb, root=root)
 
 
 def compact_index(spark, path: str, dest: str | None, table: str,
@@ -1111,6 +1123,19 @@ def generation_sets(rows) -> dict:
         "max_generation": max(all_gens),
         "incomplete_generations": sorted(all_gens - set(committed)),
     }
+
+
+def read_committed(spark, path: str, table: str, committed):
+    """Read one generation-tagged index table serving COMMITTED
+    generations only — orphan rows from a crashed add are dropped by
+    the ``gen`` filter (partition pruning where ``gen`` is a directory
+    key, file-level row-group stats elsewhere) without reading their
+    data."""
+    from pyspark.sql import functions as F
+
+    return spark.read.parquet(f"{path}/{table}").where(
+        F.col("gen").isin([int(g) for g in committed])
+    ).drop("gen")
 
 
 def is_missing_path(e) -> bool:

@@ -1445,17 +1445,6 @@ def _minhash_manifest(spark, path: str) -> dict:
     }
 
 
-def _minhash_committed(spark, path: str, table: str, committed) -> DataFrame:
-    """Read one index table serving COMMITTED generations only — orphan
-    rows from a crashed add are dropped by the ``gen`` filter
-    (partition pruning on bands, file-level row-group stats on the
-    rest) without reading their data."""
-    df = spark.read.parquet(f"{path}/{table}")
-    return df.where(
-        F.col("gen").isin([int(g) for g in committed])
-    ).drop("gen")
-
-
 def build_minhash_index(
     corpus: DataFrame,
     path: str,
@@ -1634,175 +1623,153 @@ def add_to_minhash_index(
 
     Returns {batch_docs, new_content, band_rows_added,
     band_rows_capped, generation}."""
-    from keystone_spark.fsutil import (
-        acquire_write_lock,
-        assert_latest_unchanged,
-        release_write_lock,
-        resolve_index_path,
-    )
-
-    # mutations target the CURRENT snapshot (a dest-compact may have
-    # republished the index under a _LATEST pointer)
-    root, path = path, resolve_index_path(spark, path)
-    # mutation lock FIRST (VERDICT r11 #1): generation allocation reads
-    # max_generation from the manifest, so two concurrent adds without
-    # the lock could both claim gen N+1 and interleave their rows under
-    # one committed generation. Lock-then-check-compact is the
-    # deadlock-free handshake documented on acquire_write_lock; the
-    # whole intent->commit span runs under it.
-    acquire_write_lock(spark, path)
-    try:
-        assert_latest_unchanged(spark, root, path)
-        return _add_to_minhash_locked(spark, path, batch, id_col,
-                                      text_col)
-    finally:
-        release_write_lock(spark, path)
-
-
-def _add_to_minhash_locked(spark, path: str, batch: DataFrame,
-                           id_col: str, text_col: str) -> dict:
     from pyspark.errors import AnalysisException
 
     from keystone_spark.fsutil import (
-        assert_not_compacting,
         is_missing_path,
-        read_compact_epoch,
+        mutation_span,
+        read_committed,
     )
 
-    assert_not_compacting(spark, path)
-    entry_epoch = read_compact_epoch(spark, path)
-    cfg = _minhash_manifest(spark, path)
-    n_hashes, n_bands = cfg["n_hashes"], cfg["n_bands"]
-    shingle_k, seed = cfg["shingle_k"], cfg["seed"]
-    bucket_cap = cfg["bucket_cap"]
-    committed = cfg["committed"]
-    try:
-        content = _minhash_committed(spark, path, "content", committed)
-    except AnalysisException as e:
-        if not is_missing_path(e):
-            raise
-        raise ValueError(
-            f"index at {path} has no content table — it predates r10 "
-            "append support; rebuild it with build_minhash_index"
-        ) from e
-    tomb = _minhash_tombstones(spark, path, id_col)
-    if tomb is not None:
-        # ADVICE r10 #1 / VERDICT r10 #1: a tombstoned representative's
-        # content row must NOT block re-adding that content before the
-        # compact purges it — otherwise the delete docstring's recovery
-        # path ("add a surviving copy back") silently no-ops and the
-        # content is simultaneously unfindable and un-addable until a
-        # compact runs. Excluding tombstoned ids from the skip set makes
-        # an add of previously-deleted content index it fresh under the
-        # new id (match's band anti-join keeps the dead rows invisible).
-        content = content.join(F.broadcast(tomb), id_col, "left_anti")
-
-    batch = batch.where(F.col(text_col).isNotNull())
-    if tomb is not None:
-        # A batch row carrying a TOMBSTONED id must not be indexed: its
-        # band/sig rows would be invisible to match (the id anti-join)
-        # and physically purged at the next compact — a black hole that
-        # would report success. Same contract as IvfIndex.add's skip
-        # set: a deleted id cannot return until compact frees it;
-        # re-ingest deleted content under a FRESH id (any other copy in
-        # the batch becomes the representative and indexes normally).
-        batch = batch.join(F.broadcast(tomb), id_col, "left_anti")
+    # the write lock (VERDICT r11 #1) covers the whole intent->commit
+    # span: generation allocation reads max_generation from the
+    # manifest, so two concurrent adds without it could both claim gen
+    # N+1 and interleave their rows under one committed generation.
+    # ``path`` becomes the CURRENT snapshot the span resolved.
     caches: list = []
-    brep = _persist_once(
-        batch.select(F.col(id_col), F.xxhash64(text_col).alias("ck"))
-        .groupBy("ck")
-        .agg(F.min(id_col).alias(id_col)),
-        caches,
-    )
-    new = _persist_once(
-        brep.join(content.select("ck"), "ck", "left_anti"), caches
-    )
-    n_batch = brep.count()
-    n_new = new.count()
-    if n_new == 0:
-        # nothing to write -> no intent row either: a replayed or
-        # re-crawled batch leaves the manifest untouched (idempotent)
-        for c in caches:
-            c.unpersist()
-        return {"batch_docs": int(n_batch), "new_content": 0,
-                "band_rows_added": 0, "band_rows_capped": 0,
-                "generation": None}
-    new_reps = batch.join(new.select(id_col), id_col, "left_semi")
-    sigs_new = _persist_once(minhash_signatures(
-        new_reps, id_col, text_col, n_hashes, shingle_k, seed
-    ), caches)
-    bands_new = _persist_once(
-        minhash_banded(sigs_new, id_col, n_bands, n_hashes), caches
-    )
-    n_banded = bands_new.count()
-    if bucket_cap is not None:
-        touched = bands_new.select("band", "bucket").distinct()
-        stored_bands = _minhash_committed(spark, path, "bands", committed)
-        if tomb is not None:
-            # occupancy counts LIVE members only: tombstoned docs'
-            # band rows are dead weight a compact will drop — counting
-            # them would cap new rows out of buckets whose live
-            # membership is under the cap (silent recall loss that no
-            # later add can repair)
-            stored_bands = stored_bands.join(
-                F.broadcast(tomb), id_col, "left_anti"
-            )
-        stored_occ = (
-            stored_bands
-            .join(F.broadcast(touched), ["band", "bucket"], "left_semi")
-            .groupBy("band", "bucket")
-            .agg(F.count("*").alias("__stored"))
-        )
-        new_occ = bands_new.groupBy("band", "bucket").agg(
-            F.count("*").alias("__new")
-        )
-        over = (
-            new_occ.join(stored_occ, ["band", "bucket"], "left")
-            .where(
-                F.coalesce(F.col("__stored"), F.lit(0)) + F.col("__new")
-                > bucket_cap
-            )
-            .select("band", "bucket")
-        )
-        kept = bands_new.join(F.broadcast(over), ["band", "bucket"],
-                              "left_anti")
-    else:
-        kept = bands_new
-    kept = _persist_once(kept, caches)
-    n_kept = kept.count()
-    gen = int(cfg["max_generation"]) + 1
-    genl = F.lit(gen)
-    _minhash_append_manifest(spark, path, cfg, gen, committed=False)
-    kept.withColumn("gen", genl).write.mode("append").partitionBy(
-        "band", "gen"
-    ).parquet(f"{path}/bands")
-    sigs_new.withColumn("gen", genl).write.mode("append").parquet(
-        f"{path}/sigs"
-    )
-    new.select("ck", id_col).withColumn("gen", genl).write.mode(
-        "append"
-    ).parquet(f"{path}/content")
-    if cfg["store_texts"]:
-        new_reps.select(F.col(id_col), F.col(text_col)).withColumn(
-            "gen", genl
-        ).write.mode("append").parquet(f"{path}/texts")
-    # re-check the compact lock at the COMMIT point (see
-    # Bm25Index.add): a compact that started mid-add listed the tables
-    # without this generation; abort uncommitted instead of handing its
-    # swap rows to erase
-    from keystone_spark.fsutil import assert_not_compacting as _anc
-    from keystone_spark.fsutil import assert_same_compact_epoch as _ace
+    with mutation_span(spark, path) as (path, fence):
+        try:
+            cfg = _minhash_manifest(spark, path)
+            n_hashes, n_bands = cfg["n_hashes"], cfg["n_bands"]
+            shingle_k, seed = cfg["shingle_k"], cfg["seed"]
+            bucket_cap = cfg["bucket_cap"]
+            committed = cfg["committed"]
+            try:
+                content = read_committed(spark, path, "content", committed)
+            except AnalysisException as e:
+                if not is_missing_path(e):
+                    raise
+                raise ValueError(
+                    f"index at {path} has no content table — it predates "
+                    "r10 append support; rebuild it with "
+                    "build_minhash_index"
+                ) from e
+            tomb = _minhash_tombstones(spark, path, id_col)
+            if tomb is not None:
+                # ADVICE r10 #1 / VERDICT r10 #1: a tombstoned
+                # representative's content row must NOT block re-adding
+                # that content before the compact purges it — otherwise
+                # the delete docstring's recovery path ("add a surviving
+                # copy back") silently no-ops and the content is
+                # simultaneously unfindable and un-addable until a
+                # compact runs. Excluding tombstoned ids from the skip
+                # set makes an add of previously-deleted content index
+                # it fresh under the new id (match's band anti-join
+                # keeps the dead rows invisible).
+                content = content.join(F.broadcast(tomb), id_col,
+                                       "left_anti")
 
-    try:
-        _anc(spark, path)
-        _ace(spark, path, entry_epoch)
-        _minhash_append_manifest(spark, path, cfg, gen, committed=True)
-    except BaseException:
-        for c in caches:
-            c.unpersist()
-        raise
-    for c in caches:
-        c.unpersist()
+            batch = batch.where(F.col(text_col).isNotNull())
+            if tomb is not None:
+                # A batch row carrying a TOMBSTONED id must not be
+                # indexed: its band/sig rows would be invisible to match
+                # (the id anti-join) and physically purged at the next
+                # compact — a black hole that would report success. Same
+                # contract as IvfIndex.add's skip set: a deleted id
+                # cannot return until compact frees it; re-ingest
+                # deleted content under a FRESH id (any other copy in
+                # the batch becomes the representative and indexes
+                # normally).
+                batch = batch.join(F.broadcast(tomb), id_col, "left_anti")
+            brep = _persist_once(
+                batch.select(F.col(id_col),
+                             F.xxhash64(text_col).alias("ck"))
+                .groupBy("ck")
+                .agg(F.min(id_col).alias(id_col)),
+                caches,
+            )
+            new = _persist_once(
+                brep.join(content.select("ck"), "ck", "left_anti"), caches
+            )
+            n_batch = brep.count()
+            n_new = new.count()
+            if n_new == 0:
+                # nothing to write -> no intent row either: a replayed
+                # or re-crawled batch leaves the manifest untouched
+                # (idempotent)
+                return {"batch_docs": int(n_batch), "new_content": 0,
+                        "band_rows_added": 0, "band_rows_capped": 0,
+                        "generation": None}
+            new_reps = batch.join(new.select(id_col), id_col, "left_semi")
+            sigs_new = _persist_once(minhash_signatures(
+                new_reps, id_col, text_col, n_hashes, shingle_k, seed
+            ), caches)
+            bands_new = _persist_once(
+                minhash_banded(sigs_new, id_col, n_bands, n_hashes), caches
+            )
+            n_banded = bands_new.count()
+            if bucket_cap is not None:
+                touched = bands_new.select("band", "bucket").distinct()
+                stored_bands = read_committed(spark, path, "bands",
+                                              committed)
+                if tomb is not None:
+                    # occupancy counts LIVE members only: tombstoned
+                    # docs' band rows are dead weight a compact will
+                    # drop — counting them would cap new rows out of
+                    # buckets whose live membership is under the cap
+                    # (silent recall loss that no later add can repair)
+                    stored_bands = stored_bands.join(
+                        F.broadcast(tomb), id_col, "left_anti"
+                    )
+                stored_occ = (
+                    stored_bands
+                    .join(F.broadcast(touched), ["band", "bucket"],
+                          "left_semi")
+                    .groupBy("band", "bucket")
+                    .agg(F.count("*").alias("__stored"))
+                )
+                new_occ = bands_new.groupBy("band", "bucket").agg(
+                    F.count("*").alias("__new")
+                )
+                over = (
+                    new_occ.join(stored_occ, ["band", "bucket"], "left")
+                    .where(
+                        F.coalesce(F.col("__stored"), F.lit(0))
+                        + F.col("__new") > bucket_cap
+                    )
+                    .select("band", "bucket")
+                )
+                kept = bands_new.join(F.broadcast(over), ["band", "bucket"],
+                                      "left_anti")
+            else:
+                kept = bands_new
+            kept = _persist_once(kept, caches)
+            n_kept = kept.count()
+            gen = int(cfg["max_generation"]) + 1
+            genl = F.lit(gen)
+            _minhash_append_manifest(spark, path, cfg, gen,
+                                     committed=False)
+            kept.withColumn("gen", genl).write.mode("append").partitionBy(
+                "band", "gen"
+            ).parquet(f"{path}/bands")
+            sigs_new.withColumn("gen", genl).write.mode("append").parquet(
+                f"{path}/sigs"
+            )
+            new.select("ck", id_col).withColumn("gen", genl).write.mode(
+                "append"
+            ).parquet(f"{path}/content")
+            if cfg["store_texts"]:
+                new_reps.select(F.col(id_col), F.col(text_col)).withColumn(
+                    "gen", genl
+                ).write.mode("append").parquet(f"{path}/texts")
+            # COMMIT-point fence: a compact that started mid-add listed
+            # the tables without this generation; abort uncommitted
+            # instead of handing its swap rows to erase
+            fence()
+            _minhash_append_manifest(spark, path, cfg, gen, committed=True)
+        finally:
+            for c in caches:
+                c.unpersist()
     return {
         "batch_docs": int(n_batch),
         "new_content": int(n_new),
@@ -1896,6 +1863,7 @@ def compact_minhash_index(spark, path: str, dest: str | None = None
     from keystone_spark.fsutil import (
         compact_index,
         fs_exists,
+        read_committed,
         resolve_index_path,
     )
 
@@ -1906,13 +1874,13 @@ def compact_minhash_index(spark, path: str, dest: str | None = None
     def rewrite(snap, out):
         cfg = _minhash_manifest(spark, snap)
         committed = cfg["committed"]
-        bands = _minhash_committed(spark, snap, "bands", committed)
-        sigs = _minhash_committed(spark, snap, "sigs", committed)
-        content = _minhash_committed(spark, snap, "content", committed)
+        bands = read_committed(spark, snap, "bands", committed)
+        sigs = read_committed(spark, snap, "sigs", committed)
+        content = read_committed(spark, snap, "content", committed)
         id_col = [c for c in sigs.columns if c != "sig"][0]
         texts = None
         if cfg["store_texts"] and fs_exists(spark, f"{snap}/texts"):
-            texts = _minhash_committed(spark, snap, "texts", committed)
+            texts = read_committed(spark, snap, "texts", committed)
         tomb = _minhash_tombstones(spark, snap, id_col)
         if tomb is not None:
             # purge point for delete_from_minhash_index tombstones
@@ -2130,7 +2098,7 @@ def match_minhash_index(
     only generations with a committed manifest row are served (crash
     safety, VERDICT r10 #1) — so data without a readable manifest is an
     interrupted/corrupt index, not a validable one."""
-    from keystone_spark.fsutil import resolve_index_path
+    from keystone_spark.fsutil import read_committed, resolve_index_path
 
     path = resolve_index_path(spark, path)  # follow _LATEST
     cfg = _minhash_manifest(spark, path)
@@ -2146,10 +2114,10 @@ def match_minhash_index(
                         for k, (g, s) in sorted(bad.items()))
         )
     committed = cfg["committed"]
-    bands_c = _minhash_committed(spark, path, "bands", committed).select(
+    bands_c = read_committed(spark, path, "bands", committed).select(
         id_col, F.col("band").cast("int").alias("band"), "bucket"
     )
-    sigs_c = _minhash_committed(spark, path, "sigs", committed)
+    sigs_c = read_committed(spark, path, "sigs", committed)
     tomb = _minhash_tombstones(spark, path, id_col)
     if tomb is not None:
         # tombstoned docs stop matching IMMEDIATELY (no candidate can

@@ -801,7 +801,7 @@ class Bm25Index:
                 "table, r12) — rebuild the index with "
                 "Bm25Index.build().save()"
             )
-        from keystone_spark.fsutil import generation_sets
+        from keystone_spark.fsutil import generation_sets, read_committed
 
         sets = generation_sets(gens)
         params = {
@@ -811,12 +811,12 @@ class Bm25Index:
             "n_term_buckets": nb, "id_col": id_col,
             **sets,
         }
-        keep = F.col("gen").isin([int(g) for g in sets["committed"]])
+        committed = sets["committed"]
         return cls(
-            spark.read.parquet(f"{path}/postings").where(keep).drop("gen"),
-            spark.read.parquet(f"{path}/df").where(keep).drop("gen"),
+            read_committed(spark, path, "postings", committed),
+            read_committed(spark, path, "df", committed),
             params, path=path,
-            docs=spark.read.parquet(f"{path}/docs").where(keep).drop("gen"),
+            docs=read_committed(spark, path, "docs", committed),
         )
 
     @classmethod
@@ -873,29 +873,15 @@ class Bm25Index:
         observability dict; reload via ``load`` to search the updated
         index (an already-loaded instance's file listing predates the
         append)."""
-        from keystone_spark.fsutil import (
-            acquire_write_lock,
-            assert_latest_unchanged,
-            assert_not_compacting,
-            read_compact_epoch,
-            release_write_lock,
-            resolve_index_path,
-        )
+        from keystone_spark.fsutil import mutation_span
 
-        # mutations target the CURRENT snapshot (a dest-compact/retrain
-        # may have republished the index under a _LATEST pointer)
-        root, path = path, resolve_index_path(spark, path)
-        # mutation lock FIRST (VERDICT r11 #1 — enforced single-writer):
-        # generation allocation below reads max_generation from the
-        # manifest, so two concurrent adds without the lock would both
-        # claim gen N+1 and interleave their data rows under one
-        # committed generation. Lock-then-check-compact is the
-        # deadlock-free handshake documented on acquire_write_lock.
-        acquire_write_lock(spark, path)
-        try:
-            assert_latest_unchanged(spark, root, path)
-            assert_not_compacting(spark, path)
-            entry_epoch = read_compact_epoch(spark, path)
+        # the write lock (VERDICT r11 #1 — enforced single-writer)
+        # covers the whole intent->commit span: generation allocation
+        # below reads max_generation from the manifest, so two
+        # concurrent adds without it would both claim gen N+1 and
+        # interleave their data rows under one committed generation.
+        # ``path`` becomes the CURRENT snapshot the span resolved.
+        with mutation_span(spark, path) as (path, fence):
             idx = cls.load(spark, path)  # validates format + manifest
             p = idx.params
             if skip_existing_ids:
@@ -924,40 +910,30 @@ class Bm25Index:
             # the postings cache (the postings_added stat reads it
             # back) — the batch is evaluated exactly twice per append
             docs_tbl = docs_tbl.persist()
-            n_docs, sum_dl = cls._doc_totals(docs_tbl)
-            if n_docs == 0:
-                docs_tbl.unpersist()
-                return {"batch_docs": 0, "postings_added": 0,
-                        "generation": None}
             postings = postings.persist()
             try:
+                n_docs, sum_dl = cls._doc_totals(docs_tbl)
+                if n_docs == 0:
+                    return {"batch_docs": 0, "postings_added": 0,
+                            "generation": None}
                 batch = cls(postings, df_t, p, docs=docs_tbl)
                 gen = int(p["max_generation"]) + 1
                 cls._append_manifest(spark, path, p, gen, 0, 0,
                                      committed=False)
                 batch._write_data(path, "append", gen)
                 n_postings = postings.count()
-                # COMMIT-point fences: the lock check catches a compact
-                # still running; the epoch fence catches one that
-                # started AND FINISHED inside this add's write window
-                # (its swap already erased the gen-N files — committing
-                # would record a generation with no data, or
-                # double-count on a re-allocated gen number). Either
-                # way the add aborts uncommitted and a blind retry is
-                # safe.
-                from keystone_spark.fsutil import (
-                    assert_same_compact_epoch,
-                )
-
-                assert_not_compacting(spark, path)
-                assert_same_compact_epoch(spark, path, entry_epoch)
+                # COMMIT-point fence: a compact still running, or one
+                # that started AND FINISHED inside this add's write
+                # window (its swap already erased the gen-N files —
+                # committing would record a generation with no data,
+                # or double-count on a re-allocated gen number), aborts
+                # the add uncommitted, and a blind retry is safe.
+                fence()
                 cls._append_manifest(spark, path, p, gen, n_docs,
                                      sum_dl, committed=True)
             finally:
                 postings.unpersist()
                 docs_tbl.unpersist()
-        finally:
-            release_write_lock(spark, path)
         return {
             "batch_docs": n_docs,
             "postings_added": n_postings,

@@ -533,8 +533,9 @@ class _CellIndex:
     subclass supplies its table and model file, the model's JSON fields
     (``_meta`` / ``_from_meta``) and ``_kernel``, the per-row function
     that cell-assigns (and encodes) rows under its FROZEN model.
-    Compact and delete run the protocol every index family shares
-    (``fsutil.compact_index`` / ``fsutil.delete_from_index``)."""
+    Add runs inside ``fsutil.mutation_span``; compact and delete run
+    the protocol every index family shares (``fsutil.compact_index`` /
+    ``fsutil.delete_from_index``)."""
 
     TABLE: str
     MODEL_FILE: str
@@ -573,28 +574,14 @@ class _CellIndex:
         caller passes — it must cover the appended ids too."""
         from keystone_spark.fsutil import (
             IndexContention,
-            acquire_write_lock,
-            assert_latest_unchanged,
-            assert_not_compacting,
-            assert_same_compact_epoch,
-            read_compact_epoch,
+            mutation_span,
             read_valid_index_stats,
             refresh_index_stats,
-            release_write_lock,
-            resolve_index_path,
             write_index_stats,
         )
 
-        # mutations target the CURRENT snapshot (a dest-compact or
-        # retrain may have republished under a _LATEST pointer)
-        root, path = path, resolve_index_path(spark, path)
-        # mutation lock FIRST (VERDICT r11 #1): serializes concurrent
-        # adds/deletes; lock-then-check-compact is the deadlock-free
-        # handshake documented on acquire_write_lock
-        acquire_write_lock(spark, path)
-        try:
-            assert_latest_unchanged(spark, root, path)
-            assert_not_compacting(spark, path)
+        # ``path`` becomes the CURRENT snapshot the span resolved
+        with mutation_span(spark, path) as (path, fence):
             idx = cls.load(spark, path)
             # pin the batch to the STORED schema (r13): an append whose
             # id/vector types differ from the stored table (array<double>
@@ -624,8 +611,7 @@ class _CellIndex:
                 # re-check at the write: a compact listed its input
                 # before this batch existed — committing under it hands
                 # the swap rows it will erase
-                assert_not_compacting(spark, path)
-                entry_epoch = read_compact_epoch(spark, path)
+                fence()
                 # pre-write stats read (r14): validation is against the
                 # PRE-append file listing, so it must happen before the
                 # parquet write changes the count
@@ -639,11 +625,9 @@ class _CellIndex:
                 # during it and is still running holds the lock but has
                 # not bumped the epoch yet, so the epoch fence alone
                 # would pass while the compact's swap goes on to erase
-                # the just-appended rows. Same pattern as
-                # fsutil.append_tombstones and Bm25Index.add.
+                # the just-appended rows.
                 try:
-                    assert_not_compacting(spark, path)
-                    assert_same_compact_epoch(spark, path, entry_epoch)
+                    fence()
                 except ValueError as e:
                     # re-wrap PRESERVING IndexContention (r13): the
                     # streaming fold's retry loop keys on the class
@@ -668,8 +652,6 @@ class _CellIndex:
                     refresh_index_stats(spark, path, cls.TABLE, "cell")
             finally:
                 rows.unpersist()
-        finally:
-            release_write_lock(spark, path)
         total = sum(cells.values())
         return {"vectors_added": total,
                 "cells_touched": len(cells), "cell_histogram": cells,

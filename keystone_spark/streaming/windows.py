@@ -831,7 +831,6 @@ def stream_neardup_against_index(
     from pyspark.errors import AnalysisException
 
     from keystone_spark.operators.dedup import (
-        _minhash_committed,
         _minhash_manifest,
         add_to_minhash_index,
         compact_minhash_index,
@@ -839,7 +838,11 @@ def stream_neardup_against_index(
         release,
     )
 
-    from keystone_spark.fsutil import resolve_index_path, retry_contention
+    from keystone_spark.fsutil import (
+        read_committed,
+        resolve_index_path,
+        retry_contention,
+    )
 
     spark = stream_docs.sparkSession
     store_texts = bool(_minhash_manifest(
@@ -864,7 +867,7 @@ def stream_neardup_against_index(
             # the _LATEST pointer to a new snapshot dir.
             rp = resolve_index_path(spark, index_path)
             cfg = _minhash_manifest(spark, rp)
-            texts = _minhash_committed(
+            texts = read_committed(
                 spark, rp, "texts", cfg["committed"]
             ).select(F.col(id_col), F.col(text_col))
         else:

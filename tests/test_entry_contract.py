@@ -39,6 +39,44 @@ def test_all_queries_run(spark, sf_dir):
     assert not failures, failures
 
 
+def test_memo_index_builds_once_under_threads():
+    """test_all_queries_run hits the index memo from 8 threads: 8
+    threads asking for one key run ``build`` once and all get its path,
+    and another key's build is not held up behind it (per-key lock)."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    calls = []
+    other_built = threading.Event()
+    session = object()
+
+    def build():
+        calls.append(1)
+        # a single global lock would stall here: the other key's build
+        # must run while this one holds its own key's lock
+        assert other_built.wait(10)
+        return f"/idx/{len(calls)}"
+
+    def build_other():
+        other_built.set()
+        return "/idx/other"
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the check-then-set
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(entry_mod._memo_index, "memo_test",
+                                session, "sf", build) for _ in range(8)]
+            assert entry_mod._memo_index("memo_test_other", session, "sf",
+                                         build_other) == "/idx/other"
+            paths = {f.result(timeout=60) for f in futs}
+    finally:
+        sys.setswitchinterval(interval)
+    assert paths == {"/idx/1"}
+    assert len(calls) == 1
+
+
 def test_registry_hygiene_full_surface():
     """Every declared query has an oracle, every oracle has a query, all
     oracle strings are non-trivial SQL, and the rotation set (queries

@@ -861,3 +861,59 @@ def test_compact_completing_inside_add_window_fences_the_commit(
                       for r in df.collect())
 
     assert key(idx.search(qs, k=4)) == key(full.search(qs, k=4))
+
+
+@pytest.mark.parametrize("family", ["ivf", "ivfpq"])
+def test_vector_add_fenced_when_compact_starts_mid_write(
+    spark, sf_dir, tmp_path, monkeypatch, family
+):
+    """The vector families' commit-point fence: a compact takes its
+    lock after the add passed its pre-write fence, while the append is
+    being written. The post-write fence raises IndexContention and the
+    add's write lock is released. Once the compact lock clears, the
+    documented retry (``skip_existing_ids=True``) stores every batch id
+    exactly once, and search equals one clean add of the batch."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from keystone_spark import fsutil
+    from keystone_spark.operators.similarity import IvfIndex, IvfPqIndex
+
+    fam = {"ivf": IvfIndex, "ivfpq": IvfPqIndex}[family]
+    e = load_table(spark, "embeddings", sf_dir)
+    probes = e.orderBy("vec_id").limit(3)
+    base, batch = e.where("vec_id % 3 != 0"), e.where("vec_id % 3 = 0")
+    path, clean = str(tmp_path / family), str(tmp_path / f"{family}_clean")
+    for p in (path, clean):
+        fam.build(base, n_cells=4).save(p)
+    fam.add(spark, clean, batch)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet_then_lock(self, p, *args, **kwargs):
+        real_parquet(self, p, *args, **kwargs)
+        if p == f"{path}/{fam.TABLE}":  # a compact starts mid-append
+            fsutil.acquire_compact_lock(spark, path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_then_lock)
+    with pytest.raises(fsutil.IndexContention, match="skip_existing_ids"):
+        fam.add(spark, path, batch)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    assert not fsutil.fs_exists(spark, f"{path}/{fsutil.WRITE_LOCK}")
+
+    fsutil.release_compact_lock(spark, path)
+    fam.add(spark, path, batch, skip_existing_ids=True)
+
+    def ids(p):
+        return sorted(r.vec_id for r in
+                      fam.load(spark, p).indexed.select("vec_id").collect())
+
+    def search(p):
+        idx = fam.load(spark, p)
+        out = (idx.search(probes, k=5) if fam is IvfIndex
+               else idx.search(e, probes, k=5))
+        return sorted((r.probe, r.rk, r.vec_id, round(r.cos, 9))
+                      for r in out.collect())
+
+    assert ids(path) == ids(clean)
+    assert len(set(ids(path))) == len(ids(path))  # each id exactly once
+    assert search(path) == search(clean)
